@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -315,6 +316,21 @@ def _load_query_timings(path: str) -> dict[str, float]:
         return {}
 
 
+_BENCH_NAME = re.compile(r"^BENCH(_LOCAL)?_r(\d+)(?:_(\d+))?\.json$")
+
+
+def _parse_bench_name(path: str) -> tuple[int, int, int] | None:
+    """(round, rank, seq) for a ``BENCH_r{N}[_{k}].json`` (rank 0) or
+    ``BENCH_LOCAL_r{N}[_{k}].json`` (rank 1) artifact; None for any
+    other name.  The one filename parser behind both round inference
+    and the baseline chain, so a non-numeric suffix (core-count runs
+    such as ``BENCH_r14_c8.json``) is excluded from both."""
+    m = _BENCH_NAME.match(os.path.basename(path))
+    if not m:
+        return None
+    return int(m.group(2)), int(bool(m.group(1))), int(m.group(3) or 0)
+
+
 def _bench_round_files(here: str = _HERE) -> list[tuple[int, str]]:
     """(round, path) for every BENCH_r*/BENCH_LOCAL_r* artifact, sorted
     ascending by round; the LOCAL file for a round sorts after the
@@ -323,16 +339,11 @@ def _bench_round_files(here: str = _HERE) -> list[tuple[int, str]]:
     collision-avoidance files (``BENCH_LOCAL_r14_2.json`` — see
     ``_local_bench_path``) sort after the base file of the same round,
     so the newest run of a round wins the tie."""
-    import glob
-    import re
-
-    out: list[tuple[int, int, int, str]] = []
-    for rank, pattern in ((0, "BENCH_r*.json"), (1, "BENCH_LOCAL_r*.json")):
-        for p in glob.glob(os.path.join(here, pattern)):
-            m = re.search(r"r(\d+)(?:_(\d+))?\.json$", os.path.basename(p))
-            if m:
-                seq = int(m.group(2)) if m.group(2) else 0
-                out.append((int(m.group(1)), rank, seq, p))
+    out = [
+        (*parsed, os.path.join(here, name))
+        for name in os.listdir(here)
+        if (parsed := _parse_bench_name(name))
+    ]
     return [(rnd, p) for rnd, _, _, p in sorted(out)]
 
 
@@ -447,12 +458,10 @@ def _next_round(here: str = _HERE) -> int:
     """1 + the highest round number among driver BENCH_r*.json files
     (the driver writes those at round end, so during round N the newest
     is N-1)."""
-    import glob
-    import re
-
     rounds = [
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        rnd
+        for rnd, rank, _ in filter(None, map(_parse_bench_name, os.listdir(here)))
+        if rank == 0
     ]
     return (max(rounds) + 1) if rounds else 1
 

@@ -61,14 +61,16 @@ def sql_exact_sum(term: str, scale: int = 2) -> str:
 
 
 def sql_exact_avg(term: str, scale: int = 2) -> str:
-    """AVG over doubles: exact decimal sum, then one double division and
-    a round applied to identical inputs on both engines."""
+    """AVG over doubles: exact decimal sum, then one double division
+    (identical on both engines) rounded through ``sql_exact_round`` —
+    a plain round(double) of the quotient splits half-cent means."""
     # nullif guard: an all-null group has count=0, and ANSI-mode Spark
     # (the Spark 4 default) throws on division by zero where DuckDB
     # returns NULL — nullif makes both engines return NULL.
-    return (
-        f"round(cast(sum(cast(({term}) as decimal(28,8))) as double)"
-        f" / nullif(count({term}), 0), {scale})"
+    return sql_exact_round(
+        f"cast(sum(cast(({term}) as decimal(28,8))) as double)"
+        f" / nullif(count({term}), 0)",
+        scale,
     )
 
 

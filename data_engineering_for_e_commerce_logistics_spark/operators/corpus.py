@@ -654,8 +654,8 @@ def _topn_by_bucketed_key(
     payload_cols: tuple[str, ...],
 ) -> DataFrame:
     """Exact top-n-per-stratum by ascending ``skey`` WITHOUT a
-    per-stratum window — the shared tail of ``weighted_sample_flag``
-    and ``dsir_resample_flag``.  ``d`` must carry ``skey`` (the order
+    per-stratum window — the tail of ``weighted_sample_flag``.
+    ``d`` must carry ``skey`` (the order
     key), ``__bkt`` (a monotone-in-skey bucket id), ``strata``,
     ``id_col`` and ``payload_cols``.  Per-(stratum, bucket) counts
     fold to cumulative offsets; only buckets whose offset < n can
@@ -728,206 +728,6 @@ def hashed_ngram_buckets(
     )
     return df.select(F.col(id_col), *carry_cols, feat).select(
         F.col(id_col), *carry_cols, b.alias("b")
-    )
-
-
-def dsir_log_ratio_weights(
-    df: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """DSIR importance weights: fit hashed-n-gram bag-of-words models
-    on the TARGET slice (rows where ``target`` is true — the domain
-    the training mix should match) and on the RAW corpus, then score
-    every document by its log importance ratio
-    ``Σ_feat ln(p_target[b]/p_raw[b])`` under add-0.5 smoothing.
-    Returns (id, n_feats, lr_weight); docs that look like the target
-    domain score high and feed ``dsir_resample_flag``.
-
-    Cross-engine exactness: each bucket's log-ratio is ONE rounded
-    double (exact_round 9dp — the ln-then-decimal-round pattern of
-    graph_queries.price_ln), and the per-doc score is an exact
-    DECIMAL(28,9) sum of those rounded values, so Spark's unordered
-    partial aggregation and DuckDB's sequential sum agree bitwise.
-
-    Scale shape: two passes over the exploded features — (1) ONE
-    fused hash-agg on the 64-bucket key computing raw and target
-    counts together (map-side combine collapses each partition to
-    ≤64 rows, the distributed n-gram-LM fit); totals fold the tiny
-    bucket frame and broadcast back as a 1-row scalar frame; (2) the
-    per-doc score joins features against the BROADCAST 64-row
-    log-ratio table and shuffles once on id.  No driver state, no
-    UDF, no cache of the unbounded corpus."""
-    feats = hashed_ngram_buckets(
-        df.select(id_col, text_col, target.alias("__is_target")),
-        text_col,
-        id_col,
-        n_buckets,
-        carry_cols=("__is_target",),
-    )
-    counts = feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_r"),
-        F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("c_t"),
-    )
-    return _dsir_doc_scores(
-        feats.select(id_col, "b"),
-        _dsir_lr_table(counts, n_buckets),
-        id_col,
-    )
-
-
-def _dsir_lr_table(counts: DataFrame, n_buckets: int) -> DataFrame:
-    """(b, c_r, c_t) bucket counts → the broadcastable (b, lr)
-    log-ratio table under add-0.5 smoothing (9dp-rounded, the
-    ln-then-decimal-round pattern)."""
-    totals = counts.agg(
-        F.sum("c_r").alias("tot_r"), F.sum("c_t").alias("tot_t")
-    )
-    half_b = float(0.5 * n_buckets)
-    return counts.crossJoin(F.broadcast(totals)).select(
-        "b",
-        exact_round(
-            F.log(
-                (F.col("c_t") + F.lit(0.5))
-                / (F.col("tot_t") + F.lit(half_b))
-            )
-            - F.log(
-                (F.col("c_r") + F.lit(0.5))
-                / (F.col("tot_r") + F.lit(half_b))
-            ),
-            9,
-        ).alias("lr"),
-    )
-
-
-def _dsir_doc_scores(
-    feats: DataFrame, lr: DataFrame, id_col: str
-) -> DataFrame:
-    """(id, b) feature stream × broadcast (b, lr) → per-doc
-    (id, n_feats, lr_weight) with the exact DECIMAL(28,9) sum."""
-    return (
-        feats.join(F.broadcast(lr), "b")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.sum(F.col("lr").cast("decimal(28,9)"))
-            .cast("double")
-            .alias("lr_weight"),
-        )
-    )
-
-
-def dsir_bucket_index(
-    df: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """The persisted DSIR state: (b, c_r, c_t) hashed-n-gram bucket
-    counts — 64 rows no matter the corpus, the whole reason DSIR
-    suits incremental ingest (contrast the dedup families, whose
-    indexes grow with the corpus)."""
-    feats = hashed_ngram_buckets(
-        df.select(id_col, text_col, target.alias("__is_target")),
-        text_col,
-        id_col,
-        n_buckets,
-        carry_cols=("__is_target",),
-    )
-    return feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_r"),
-        F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("c_t"),
-    )
-
-
-def dsir_score_batch(
-    batch: DataFrame,
-    index: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental DSIR step: score a fresh batch against the LMs the
-    index already holds (one broadcast of 64 rows + one batch-side
-    shuffle on id — the 100 TB corpus is never re-read), then accrue
-    the batch's own counts into the index.  Returns (new_index,
-    batch_scores); scoring sees the PRE-batch index, so re-ingesting
-    the same batch yields identical scores — the family's
-    determinism law."""
-    feats = hashed_ngram_buckets(
-        batch.select(id_col, text_col, target.alias("__is_target")),
-        text_col,
-        id_col,
-        n_buckets,
-        carry_cols=("__is_target",),
-    ).cache()
-    scores = _dsir_doc_scores(
-        feats.select(id_col, "b"),
-        _dsir_lr_table(index, n_buckets),
-        id_col,
-    )
-    batch_counts = feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_r"),
-        F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("c_t"),
-    )
-    new_index = (
-        index.unionByName(batch_counts)
-        .groupBy("b")
-        .agg(F.sum("c_r").alias("c_r"), F.sum("c_t").alias("c_t"))
-    )
-    return new_index, scores
-
-
-def dsir_resample_flag(
-    weights: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    weight_col: str = "lr_weight",
-    payload_cols: tuple[str, ...] = ("n_feats",),
-) -> DataFrame:
-    """Gumbel-top-n importance resampling in LOG space: DSIR draws n
-    docs without replacement with probability ∝ exp(lr_weight), which
-    is Sequential Poisson order on ξ = u / exp(lr) — ranked here by
-    ln ξ = ln u − lr so the comparison path never evaluates exp()
-    (unbounded magnitude + not cross-engine bit-stable; ln u IS
-    rounded to the same 9dp grid as lr, making the key a plain
-    difference of two exact-decimal images).  Top-n via the bucketed
-    ladder (``_topn_by_bucketed_key``) — the log-space ladder is the
-    INTEGER grid floor(key) (exact on decimal-image doubles), clamped
-    to ±80 (ln u ∈ [−22.2, 0], |lr| bounded by n_feats × max|ratio|;
-    outside keys collapse into end buckets — balance degrades, never
-    correctness).  No global window, no exp, no rand()."""
-    ln_u = exact_round(
-        F.log(
-            (
-                F.conv(
-                    F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("double")
-                + F.lit(1.0)
-            )
-            / F.lit(4294967296.0)
-        ),
-        9,
-    )
-    d = weights.select(
-        F.col(id_col),
-        *payload_cols,
-        F.col(weight_col),
-        (ln_u - F.col(weight_col)).alias("skey"),
-    ).withColumn(
-        "__bkt",
-        F.greatest(
-            F.least(F.floor(F.col("skey")), F.lit(80)), F.lit(-80)
-        ).cast("long"),
-    )
-    return _topn_by_bucketed_key(
-        d, (), n, id_col, (*payload_cols, weight_col)
     )
 
 
@@ -1596,9 +1396,8 @@ def tfidf_topk(
     never a driver round-trip.
 
     ``tf_table`` lets a caller share one materialized ``(id, term,
-    tf)`` frame across the lexical family (TF-IDF + BM25 both derive
-    everything from it — the ``lexical_retrieval_suite``
-    consolidation); when omitted the pass is built internally."""
+    tf)`` frame across several passes over the same corpus; when
+    omitted the pass is built internally."""
     if tf_table is None:
         terms = df.select(
             F.col(id_col), F.explode(tokens_col(text_col)).alias("term")
@@ -2517,134 +2316,3 @@ POISSON1_CDF = (
     0.9810118431238462,
     0.9963401531726563,
 )
-
-
-def poisson_bootstrap_ci(
-    df: DataFrame,
-    value_col: str,
-    id_col: str = "doc_id",
-    n_replicates: int = 20,
-    z: float = 1.96,
-) -> DataFrame:
-    """Deterministic Poisson bootstrap — the SCALABLE bootstrap: the
-    classic resample-n-rows-n-times bootstrap needs coordinated
-    sampling, but replacing each row's replicate multiplicity with an
-    independent Poisson(1) draw gives the same asymptotics with ONE
-    corpus pass and no coordination (the standard big-data bootstrap
-    construction).  Draws are hash-derived — ``md5(id:replicate)`` →
-    uniform → inverse-CDF ladder — so the "randomness" is exact,
-    reproducible, and engine-portable (the weighted-sample ξ
-    discipline).
-
-    Returns one row: the full-sample ``estimate`` (mean of
-    ``value_col``), the bootstrap ``boot_mean``/``boot_std`` over
-    ``n_replicates`` replicate means, and the normal-approximation
-    ``ci_lo``/``ci_hi`` at ±z·σ — the error bar a corpus-level
-    number ships with.
-
-    Exactness: integer values make every replicate's Σw·x and Σw
-    EXACT integer sums; replicate means are single divisions; the
-    replicate-level moments run 9dp-rounded decimal sums over the
-    bounded B-row frame — bitwise vs the unexpanded-CTE oracle.
-
-    100 TB shape: one explode(B) per row feeding ONE hash-agg whose
-    map-side combine collapses each partition to B rows; everything
-    after is window arithmetic over the B-row frame."""
-    b_arr = F.sequence(F.lit(0), F.lit(n_replicates - 1))
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col(id_col).cast("string"),
-                        F.lit(":"),
-                        F.col("__b").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
-    w = (
-        F.when(u < POISSON1_CDF[0], 0)
-        .when(u < POISSON1_CDF[1], 1)
-        .when(u < POISSON1_CDF[2], 2)
-        .when(u < POISSON1_CDF[3], 3)
-        .when(u < POISSON1_CDF[4], 4)
-        .otherwise(5)
-        .cast("long")
-    )
-    reps = (
-        df.select(
-            F.col(id_col), F.col(value_col).cast("long").alias("__x")
-        )
-        .select("*", F.explode(b_arr).alias("__b"))
-        .select("__b", (w * F.col("__x")).alias("__wx"), w.alias("__w"))
-        .groupBy("__b")
-        .agg(F.sum("__wx").alias("__swx"), F.sum("__w").alias("__sw"))
-        .select(
-            exact_round(
-                F.col("__swx").cast("double") / F.col("__sw").cast("double"),
-                9,
-            ).alias("__m")
-        )
-    )
-    wall = Window.partitionBy(F.lit(1))
-    stats = (
-        reps.withColumn(
-            "boot_mean",
-            exact_round(
-                F.sum(F.col("__m").cast("decimal(28,9)"))
-                .over(wall)
-                .cast("double")
-                / F.lit(float(n_replicates)),
-                9,
-            ),
-        )
-        .withColumn(
-            "__dev2",
-            exact_round(
-                (F.col("__m") - F.col("boot_mean"))
-                * (F.col("__m") - F.col("boot_mean")),
-                9,
-            ),
-        )
-        .withColumn(
-            "boot_std",
-            exact_round(
-                F.sqrt(
-                    F.sum(F.col("__dev2").cast("decimal(28,9)"))
-                    .over(wall)
-                    .cast("double")
-                    / F.lit(float(n_replicates - 1))
-                ),
-                9,
-            ),
-        )
-        .limit(1)
-        .select("boot_mean", "boot_std")
-    )
-    est = df.agg(
-        exact_round(
-            F.sum(F.col(value_col).cast("long")).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            9,
-        ).alias("estimate")
-    )
-    return est.crossJoin(F.broadcast(stats)).select(
-        "estimate",
-        "boot_mean",
-        "boot_std",
-        exact_round(
-            F.col("boot_mean") - F.lit(float(z)) * F.col("boot_std"), 9
-        ).alias("ci_lo"),
-        exact_round(
-            F.col("boot_mean") + F.lit(float(z)) * F.col("boot_std"), 9
-        ).alias("ci_hi"),
-        F.lit(n_replicates).cast("long").alias("n_replicates"),
-    )

@@ -406,8 +406,8 @@ def simhash(
 
     Expressed as explode → per-bit conditional sums → bit assembly;
     one shuffle on id_col.  Bit-exact DuckDB oracle:
-    ``plans/extended_queries.py`` DEDUP_SIMHASH_SQL /
-    DEDUP_SIMHASH_PAIRS_SQL replay the same two-half nibble recovery
+    ``plans/extended_queries.py`` DEDUP_SIMHASH_SQL (and the
+    simhash suite's pair leg) replay the same two-half nibble recovery
     (driver-green since r03), so this is hash-checked, not rows-only.
 
     Per-document shingle cap (enforced at runtime, ADVICE r05): the
@@ -823,7 +823,7 @@ def incremental_simhash_dedup(
     Contract (enforced): the pigeonhole screen is only complete when
     ``max_hamming < n_bands`` (more flipped bits than bands could
     miss every band) and ``64 % n_bands == 0`` (a remainder would
-    leave high bits unbanded) — mirrors ``dedup_simhash``'s bits<=64
+    leave high bits unbanded) — mirrors ``simhash``'s bits<=64
     assert."""
     if max_hamming >= n_bands:
         raise ValueError(

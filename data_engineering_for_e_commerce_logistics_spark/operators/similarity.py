@@ -440,7 +440,7 @@ def ivf_topk(
     nprobe: int = 2,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k search — the scale path
-    that completes the `ivf_assign` coarse quantizer with an actual
+    that completes the IVF coarse quantizer with an actual
     probe-limited search:
 
     1. every corpus vector is assigned to its nearest seed centroid
@@ -709,9 +709,9 @@ def two_level_assign(
     n_probe (cost grows sublinearly) or train supers.  Trained super
     means default to double averages (fine for a router — the final
     within-group argmin is what decides); ``exact_means=True`` switches
-    to the decimal(28,8)-exact per-dimension means ``kmeans_refine``
-    uses, making the trained path engine-reproducible for an
-    oracle-paired registry spec (``routed_assign_embeddings``).
+    to decimal(28,8)-exact per-dimension means, making the trained
+    path engine-reproducible for an oracle-paired registry spec
+    (``ann_assign_suite``'s routed leg).
     APPROXIMATE by construction: a vector whose true nearest centroid
     lives under a different super mis-assigns (recall measured in
     tests; exactness returns when ``n_super == k`` since every
@@ -720,8 +720,8 @@ def two_level_assign(
     work).  Every step is deterministic (dist asc, id asc ties), so
     the operator is SQL-oracle-able for a future registry slot.
 
-    Returns (id_col, cell) like ``kmeans`` — drop-in for the SemDeDup
-    assignment stage.  100 TB shape: two broadcast joins (supers ≈
+    Returns (id_col, cell) — drop-in for the SemDeDup assignment
+    stage.  100 TB shape: two broadcast joins (supers ≈
     sqrt(k) rows, grouped centroids k rows — megabytes at k=10^4),
     zero shuffles before the caller's per-cell work."""
     import math
@@ -758,8 +758,8 @@ def two_level_assign(
     # set only (k rows per round — never touches the vectors)
     mean_of_val = (
         # decimal-exact per-dimension mean: bit-identical across
-        # engines, same pattern as kmeans_refine (needed when the
-        # trained path feeds an oracle-paired spec)
+        # engines (needed when the trained path feeds an oracle-paired
+        # spec)
         F.expr("cast(sum(cast(__val as decimal(28,8))) as double)")
         / F.count(F.lit(1))
         if exact_means
@@ -1179,75 +1179,6 @@ def diversity_report(
             ).alias("spread"),
         )
     )
-
-
-def decontaminate_semantic_arrow(
-    corpus_vecs: DataFrame,
-    bench_vecs: DataFrame,
-    tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/BLAS twin of ``decontaminate_semantic`` (the
-    ``brute_force_topk_arrow`` pattern): the benchmark collapses to a
-    dense unit-normalized numpy matrix (bounded — eval suites), and
-    each mapInPandas batch scores ALL its corpus rows with ONE matmul
-    instead of a per-(row, bench) codegen fold.  Same map-only shape,
-    same output schema.
-
-    When to prefer which: the JVM fold keeps everything in codegen
-    and is exact against the SQL oracle — it's the registered form;
-    the matmul twin wins as dim x |bench| grows (dim 768+, 100k+
-    benchmark rows — real eval-suite scale), where the vectorized
-    kernel is 10-100x the per-pair loop.  Scores agree to 1e-9 and
-    the contamination flags/counts are identical unless a pair sits
-    within one ulp of tau (unit-pinned equivalence)."""
-    import numpy as np
-    import pandas as pd
-
-    b_rows = bench_vecs.select(vec_col).collect()
-    b_mat = (
-        np.array([r[0] for r in b_rows], dtype=np.float64)
-        if b_rows
-        else np.zeros((0, 1))
-    )
-    b_norm = np.sqrt((b_mat * b_mat).sum(axis=1))
-    b_unit = b_mat[b_norm > 0] / b_norm[b_norm > 0][:, None]
-    nb = b_unit.shape[0]
-
-    out_schema = (
-        f"{id_col} long, n_bench_hits long, "
-        "max_cosine double, contaminated boolean"
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cn = np.sqrt((c * c).sum(axis=1))
-            live = cn > 0
-            hits = np.zeros(len(ids), dtype=np.int64)
-            mx = pd.array([pd.NA] * len(ids), dtype="Float64")
-            if nb and live.any():
-                sims = (c[live] / cn[live][:, None]) @ b_unit.T
-                hits[live] = (sims >= tau).sum(axis=1)
-                mx[live] = sims.max(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_bench_hits": hits,
-                    "max_cosine": mx,
-                    "contaminated": hits > 0,
-                }
-            )
-
-    corp = corpus_vecs.select(id_col, vec_col)
-    parallelism = corpus_vecs.sparkSession.sparkContext.defaultParallelism
-    if corp.rdd.getNumPartitions() < parallelism:
-        corp = corp.repartition(parallelism)
-    return corp.mapInPandas(score, out_schema)
 
 
 def incremental_semdedup(
@@ -1861,154 +1792,4 @@ def occupancy_balance(
             / F.max("__tot").cast("double"),
             9,
         ).alias("imbalance"),
-    )
-
-
-def diversity_cells(
-    df: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The diversity report's MERGEABLE cell form — every statistic
-    the report needs is an exact decimal sum, so a per-batch partial
-    merges by cell-wise addition (the generic streaming-sketch-loop
-    contract; see ``streaming/ingest.py:start_cms_stream``):
-
-    * ``('su', d)`` / ``('sv', d)`` — per-dimension unit/raw sums;
-    * ``('n', 0)`` — kept-row count; ``('usq', 0)`` / ``('vsq', 0)``
-      — Σ‖u‖² / Σ‖v‖².
-
-    Cell key ``(label, part, dim)``, value ``cnt`` DECIMAL(28,8).
-    Decimal addition is exact and associative, so ANY batch split of
-    the corpus merges to bit-identical cells — the invariant
-    ``diversity_from_cells(merged) ≡ diversity_report(full)`` holds
-    exactly, pinned by the streaming twin test."""
-    base = (
-        df.select(
-            F.col(group_col).alias("label"),
-            _as_double_vec(vec_col).alias("__v"),
-        )
-        .withColumn("__sq", _fold_sum(F.transform("__v", lambda x: x * x)))
-        .where(F.col("__sq") > 0)
-        .withColumn(
-            "__u",
-            F.transform("__v", lambda x: x / F.sqrt(F.col("__sq"))),
-        )
-    )
-    dim_cells = (
-        base.select(
-            "label",
-            F.posexplode("__u").alias("dim", "__ud"),
-            F.col("__v").alias("__vrow"),
-        )
-        .select("label", "dim", "__ud", F.expr("__vrow[dim]").alias("__vd"))
-        .groupBy("label", "dim")
-        .agg(
-            F.sum(F.col("__ud").cast("decimal(28,8)")).alias("__su"),
-            F.sum(F.col("__vd").cast("decimal(28,8)")).alias("__sv"),
-        )
-    )
-    su = dim_cells.select(
-        "label", F.lit("su").alias("part"), F.col("dim").cast("long"),
-        F.col("__su").cast("decimal(28,8)").alias("cnt"),
-    )
-    sv = dim_cells.select(
-        "label", F.lit("sv").alias("part"), F.col("dim").cast("long"),
-        F.col("__sv").cast("decimal(28,8)").alias("cnt"),
-    )
-    rows = base.groupBy("label").agg(
-        F.count(F.lit(1)).cast("decimal(28,8)").alias("__n"),
-        F.sum(
-            F.expr(
-                "cast(aggregate(transform(__u, x -> x * x),"
-                " cast(0.0 as double), (acc, x) -> acc + x)"
-                " as decimal(28,8))"
-            )
-        ).cast("decimal(28,8)").alias("__usq"),
-        F.sum(F.col("__sq").cast("decimal(28,8)"))
-        .cast("decimal(28,8)")
-        .alias("__vsq"),
-    )
-    scalars = []
-    for part, col in (("n", "__n"), ("usq", "__usq"), ("vsq", "__vsq")):
-        scalars.append(
-            rows.select(
-                "label", F.lit(part).alias("part"),
-                F.lit(0).cast("long").alias("dim"),
-                F.col(col).alias("cnt"),
-            )
-        )
-    out = su.unionByName(sv)
-    for s in scalars:
-        out = out.unionByName(s)
-    return out
-
-
-def diversity_from_cells(cells: DataFrame, group_col: str = "label") -> DataFrame:
-    """Finish the diversity report from MERGED ``diversity_cells``
-    output — the exact arithmetic of ``diversity_report``'s final
-    stage applied to the accumulated decimal cells, so a streamed
-    corpus reports bit-identically to a batch pass."""
-    dims = (
-        cells.where(F.col("part").isin("su", "sv"))
-        .groupBy(group_col, "dim")
-        .pivot("part", ["su", "sv"])
-        .agg(F.first("cnt"))
-        .select(
-            group_col, "dim",
-            F.col("su").cast("double").alias("__su"),
-            F.col("sv").cast("double").alias("__sv"),
-        )
-    )
-    vecs = dims.groupBy(group_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct("dim", "__su", "__sv"))
-        ).alias("__s")
-    ).select(
-        group_col,
-        F.transform("__s", lambda s: s["__su"]).alias("__sus"),
-        F.transform("__s", lambda s: s["__sv"]).alias("__svs"),
-    )
-    scal = (
-        cells.where(F.col("part").isin("n", "usq", "vsq"))
-        .groupBy(group_col)
-        .pivot("part", ["n", "usq", "vsq"])
-        .agg(F.first("cnt"))
-        .select(
-            group_col,
-            F.col("n").cast("long").alias("n_vecs"),
-            F.col("usq").cast("double").alias("__usq"),
-            F.col("vsq").cast("double").alias("__vsq"),
-        )
-    )
-    n_dbl = F.col("n_vecs").cast("double")
-    ssq = _fold_sum(F.transform("__sus", lambda x: x * x))
-    return (
-        scal.join(F.broadcast(vecs), group_col)
-        .select(
-            group_col,
-            "n_vecs",
-            F.when(F.col("n_vecs") < 2, F.lit(None).cast("double"))
-            .otherwise(
-                (ssq - F.col("__usq"))
-                / (F.col("n_vecs") * (F.col("n_vecs") - 1)).cast("double")
-            )
-            .alias("mean_pairwise_cos"),
-            (F.sqrt(ssq) / n_dbl).alias("mean_cos_centroid"),
-            # covariance-identity rounding (the decimal(28,8) sums
-            # quantize at 1e-8) can land ~-1e-7 for singleton groups;
-            # the trace is >= 0 by definition, so clamp — one IEEE max
-            # on identical doubles, mirrored in the DuckDB oracle.
-            F.greatest(
-                F.col("__vsq") / n_dbl
-                - _fold_sum(
-                    F.transform(
-                        "__svs",
-                        lambda x: (x / F.col("n_vecs").cast("double"))
-                        * (x / F.col("n_vecs").cast("double")),
-                    )
-                ),
-                F.lit(0.0),
-            ).alias("spread"),
-        )
     )

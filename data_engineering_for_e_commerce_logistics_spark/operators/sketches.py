@@ -64,24 +64,6 @@ def _bucket_sql(key: str, a: int, b: int, width: int) -> str:
     )
 
 
-def string_key_int(col) -> F.Column:
-    """Portable string→BIGINT key derivation for hashing NON-integer
-    keys (tokens, hosts, URLs — the corpus hot-key cases): the first
-    15 hex chars of md5 as a 60-bit integer.  Cross-engine pair:
-    Spark ``conv(substring(md5(c),1,15),16,10)`` ≡ DuckDB
-    ``('0x' || substr(md5(c),1,15))::BIGINT`` (verified value-equal;
-    the stratified-sampling key discipline), so string-keyed sketches
-    stay cell-exact across engines via ``SQL_STRING_KEY_INT``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-def sql_string_key_int(col: str) -> str:
-    """DuckDB text of ``string_key_int`` (engine dialects differ on
-    hex→int, values do not)."""
-    return f"(('0x' || substr(md5({col}), 1, 15))::BIGINT)"
-
-
 def _bucket_array(key_col: str, width: int, depth: int) -> F.Column:
     """array<long> of the key's ``depth`` bucket indices (index = d)."""
     return F.array(
@@ -108,7 +90,7 @@ def cms_build(
     NULL keys are excluded (a null hashes nowhere; callers wanting a
     null bucket coalesce to a sentinel first — the same contract as
     the bucketed-rank joins).  Cells never hit by any key are simply
-    absent; ``cms_estimate`` reads absent as 0.
+    absent (a count of 0).
     """
     if depth > len(CMS_HASHES):
         raise ValueError(f"depth ≤ {len(CMS_HASHES)} (fixed hash family)")

@@ -242,46 +242,6 @@ def ols_fit(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     )
 
 
-def sql_ols_ctes(
-    src: str, x: str, y: str, names: tuple[str, str] = ("s", "fit")
-) -> str:
-    """The DuckDB mirror of ``ols_fit`` as two CTE bodies (default
-    ``s``/``fit``; pass ``names`` when one query embeds several fits)
-    reading from CTE ``src`` with expressions ``x``/``y`` (both
-    9dp-pre-rounded)."""
-    from ..functions import sql_exact_round as r9
-
-    s_name, fit_name = names
-    return f"""{s_name} AS (
-  SELECT CAST(count(*) AS DOUBLE) AS nn,
-         cast(sum(cast(({x}) AS DECIMAL(28,9))) AS DOUBLE) AS sx,
-         cast(sum(cast(({y}) AS DECIMAL(28,9))) AS DOUBLE) AS sy,
-         cast(sum(cast({r9(f"({x}) * ({x})", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS sxx,
-         cast(sum(cast({r9(f"({x}) * ({y})", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS sxy,
-         cast(sum(cast({r9(f"({y}) * ({y})", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS syy
-  FROM {src}
-),
-{fit_name} AS (
-  SELECT CASE WHEN nn * sxx - sx * sx > 0 THEN
-           {r9("(nn * sxy - sx * sy) / (nn * sxx - sx * sx)", 9)}
-         END AS slope,
-         CASE WHEN nn * sxx - sx * sx > 0 THEN
-           {r9(
-               "(sy - ((nn * sxy - sx * sy) / (nn * sxx - sx * sx)) * sx)"
-               " / nn", 9)}
-         END AS intercept,
-         CASE WHEN nn * sxx - sx * sx > 0 AND nn * syy - sy * sy > 0 THEN
-           {r9(
-               "((nn * sxy - sx * sy) * (nn * sxy - sx * sy))"
-               " / ((nn * sxx - sx * sx) * (nn * syy - sy * sy))", 9)}
-         END AS r2
-  FROM {s_name}
-)"""
-
-
 def zipf_fit(
     df: DataFrame, text_col: str = "text", top_n: int = 100
 ) -> DataFrame:

@@ -19,19 +19,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..functions import (
-    exact_round,
-    local_rows_df,
-    sql_exact_avg,
-    sql_exact_round,
-    sql_exact_sum,
-)
+from ..functions import sql_exact_avg, sql_exact_round, sql_exact_sum
 from ..operators import corpus, text
 from ..operators.dedup import sql_shingles
 from .extended_queries import (
-    INC_B1_LT,
-    INC_B2_GE,
-    INC_OFFSET,
     QUALITY_SCORE_EXPR,
     QUALITY_T_SUBSELECT,
     _EN_STOP_SQL,
@@ -151,20 +142,17 @@ LEFT JOIN per_doc p ON p.cid = s.doc_id
 CORPUS_DECONTAMINATE_FUZZY_SQL = _corpus_decontaminate_fuzzy_sql()
 
 
-# --- Decontamination suite (r16 consolidation candidate) ---------------------
+# --- Decontamination suite ---------------------------------------------------
 
 
 def corpus_decon_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r16 (pre-built
-    unit-first in r08): the THREE decontamination family members —
-    exact shared-shingle (``corpus_decontaminate``, benchmark
-    doc_id % 97), MinHash-LSH fuzzy (``corpus_decontaminate_fuzzy``,
-    % 7), embedding-space semantic
-    (``corpus_decontaminate_semantic``, vec_id % 7) — under one
-    padded shape, every retiring spec's cells verbatim (each variant
-    keeps ITS proven fixture).  The documents table is cached once
-    and serves both text-side variants; the embeddings scan feeds the
-    semantic leg.  Unified columns: (variant, id, n_hits, score,
+    """The THREE decontamination legs under one padded shape: exact
+    shared-shingle (``corpus.decontaminate``, benchmark doc_id % 97),
+    MinHash-LSH fuzzy (``corpus.decontaminate_fuzzy``, % 7) and
+    embedding-space semantic (``similarity.decontaminate_semantic``,
+    vec_id % 7), each leg on its own fixture.  The documents table is
+    cached once and serves both text-side variants; the embeddings
+    scan feeds the semantic leg.  Unified columns: (variant, id, n_hits, score,
     contaminated) — exact's overlap count rides n_hits with a NULL
     score; fuzzy/semantic carry (match count, best similarity)."""
     from ..operators.similarity import decontaminate_semantic
@@ -235,17 +223,17 @@ FROM ({CORPUS_DECONTAMINATE_SEMANTIC_SQL})
 # which always happens after both modules finish initializing.
 
 
-# --- Domain-calibrated quality (r16 debut candidate) -------------------------
+# --- Domain-calibrated quality -----------------------------------------------
 
 CALIBRATE_KEEP_FRAC = 0.5
 
 
 def quality_calibrate_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-balanced quality retention (r08 unit-first, r16 registry
-    candidate): the text-analysis heuristic quality score calibrated
-    to its within-``source`` percent rank, one global cut keeping the
-    top half of EVERY domain — raw scores are incomparable across
-    domains, calibrated ranks are.  One scan, one window shuffle."""
+    """Domain-balanced quality retention: the text-analysis heuristic
+    quality score calibrated to its within-``source`` percent rank,
+    one global cut keeping the top half of EVERY domain — raw scores
+    are incomparable across domains, calibrated ranks are.  One scan,
+    one window shuffle."""
     from ..operators.text import quality_score
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
@@ -409,7 +397,7 @@ SELECT doc_id, lang, hash_key, split,
 FROM t
 """
 
-# --- Leakage-safe cluster split (pre-built r12) ------------------------------
+# --- Leakage-safe cluster split ---------------------------------------------
 
 
 def cluster_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,9 +499,8 @@ WEIGHTED_SAMPLE_GLOBAL = 100
 
 
 def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-proportional corpus subsampling (pre-built r12, r14
-    registry candidate): Sequential Poisson Sampling keyed on
-    ``u/n_chars`` — longer documents are proportionally likelier to
+    """Weight-proportional corpus subsampling: Sequential Poisson
+    Sampling keyed on ``u/n_chars`` — longer documents are proportionally likelier to
     be drawn, the length/quality-weighted mix rule pretraining
     pipelines use instead of uniform draws.  Two variants under one
     tagged union: exactly 40 per source (domain-balanced) and exactly
@@ -567,216 +554,6 @@ SELECT * FROM (
            AS sample_rank
   FROM k
 ) WHERE sample_rank <= {WEIGHTED_SAMPLE_GLOBAL}
-"""
-
-# --- DSIR importance resampling ---------------------------------------------
-
-DSIR_BUCKETS = 64
-DSIR_SAMPLE_K = 25
-DSIR_TARGET_SOURCE = "src0"
-
-
-def corpus_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR — Data Selection via Importance Resampling (Xie et al.,
-    NeurIPS 2023): re-weight the raw corpus toward a target domain
-    (here ``source = 'src0'``) by the hashed-n-gram log importance
-    ratio, then draw a fixed-size sample ∝ exp(weight) without
-    replacement.  Two legs under one tagged union: variant 'weight'
-    = every doc's (n_feats, lr_weight) — the reusable DSIR artifact —
-    and variant 'sample' = the top-{k} Gumbel/Sequential-Poisson draw
-    in log space.
-
-    Scale shape: the 64-bucket n-gram LMs come from ONE fused
-    hash-agg over the exploded features (map-side combine → ≤64 rows
-    per partition); the log-ratio table BROADCASTS back; per-doc
-    weights shuffle once on doc_id; the draw ranks only candidate
-    buckets of the integer log-space ladder (no global window, no
-    exp() in the comparison path).  The per-doc weights frame (3
-    narrow columns, one row per doc) is cached for the two legs —
-    at 100 TB it is the doc-count table, disk-persistable, never the
-    corpus."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    w = corpus.dsir_log_ratio_weights(
-        docs,
-        F.col("source") == DSIR_TARGET_SOURCE,
-        n_buckets=DSIR_BUCKETS,
-    ).cache()
-    weight_leg = w.select(
-        F.lit("weight").alias("variant"),
-        "doc_id",
-        "n_feats",
-        "lr_weight",
-        F.lit(None).cast("double").alias("skey"),
-        F.lit(None).cast("long").alias("sample_rank"),
-    )
-    sample_leg = corpus.dsir_resample_flag(w, DSIR_SAMPLE_K).select(
-        F.lit("sample").alias("variant"),
-        "doc_id",
-        "n_feats",
-        "lr_weight",
-        "skey",
-        "sample_rank",
-    )
-    return weight_leg.unionByName(sample_leg)
-
-
-_DSIR_LN_U = (
-    "ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT + 1.0)"
-    " / 4294967296.0)"
-)
-
-CORPUS_DSIR_SAMPLE_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-),
-feats AS (
-  SELECT doc_id, source,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {DSIR_BUCKETS}) AS b
-  FROM (
-    SELECT doc_id, source,
-           unnest(list_concat(t,
-             list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                            i -> t[i] || ' ' || t[i + 1]))) AS f
-    FROM tok
-  )
-),
-counts AS (
-  SELECT b, count(*) AS c_r,
-         sum(CASE WHEN source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END)
-           AS c_t
-  FROM feats GROUP BY b
-),
-tot AS (SELECT sum(c_r) AS tot_r, sum(c_t) AS tot_t FROM counts),
-lr AS (
-  SELECT b,
-         {sql_exact_round(
-             f"ln((c_t + 0.5) / (tot_t + {0.5 * DSIR_BUCKETS}))"
-             f" - ln((c_r + 0.5) / (tot_r + {0.5 * DSIR_BUCKETS}))", 9)}
-           AS lr
-  FROM counts, tot
-),
-w AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-         cast(sum(cast(lr AS DECIMAL(28,9))) AS DOUBLE) AS lr_weight
-  FROM feats JOIN lr USING (b)
-  GROUP BY doc_id
-),
-keyed AS (
-  SELECT doc_id, n_feats, lr_weight,
-         {sql_exact_round(_DSIR_LN_U, 9)} - lr_weight AS skey
-  FROM w
-)
-SELECT 'weight' AS variant, doc_id, n_feats, lr_weight,
-       CAST(NULL AS DOUBLE) AS skey, CAST(NULL AS BIGINT) AS sample_rank
-FROM w
-UNION ALL
-SELECT 'sample' AS variant, doc_id, n_feats, lr_weight, skey, sample_rank
-FROM (
-  SELECT doc_id, n_feats, lr_weight, skey,
-         CAST(row_number() OVER (ORDER BY skey, doc_id) AS BIGINT)
-           AS sample_rank
-  FROM keyed
-) WHERE sample_rank <= {DSIR_SAMPLE_K}
-"""
-
-# --- Incremental DSIR (persisted bucket-LM index) ----------------------------
-
-
-def incremental_dsir_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SIXTH incremental-ingest family member, DSIR flavor: batch 1
-    builds the 64-row bucket-LM index, batch 2 (the standard 20%
-    re-ingest overlap split of the exact/minhash/simhash/semdedup/PQ
-    siblings) is scored against that PRE-batch index — the corpus is
-    never re-read, and unlike the dedup siblings the persisted state
-    is O(buckets), not O(corpus), so the per-batch cost is flat BY
-    CONSTRUCTION.  Output legs: 'batch_score' = every batch-2 doc's
-    (n_feats, lr_weight) under the index LMs; 'index_after' = the
-    accrued counts after both batches (proves the update law the
-    unit equivalence test pins: accrue(index(C1), C2) =
-    index(C1 ∪ C2))."""
-    from .extended_queries import _inc_batches
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    b1, b2 = _inc_batches(docs)
-    target = F.col("source") == DSIR_TARGET_SOURCE
-    idx1 = corpus.dsir_bucket_index(b1, target, n_buckets=DSIR_BUCKETS)
-    after, scores = corpus.dsir_score_batch(
-        b2, idx1, target, n_buckets=DSIR_BUCKETS
-    )
-    score_leg = scores.select(
-        F.lit("batch_score").alias("variant"),
-        F.col("doc_id").alias("k"),
-        F.col("n_feats").alias("n"),
-        F.lit(None).cast("long").alias("c_t"),
-        "lr_weight",
-    )
-    index_leg = after.select(
-        F.lit("index_after").alias("variant"),
-        F.col("b").alias("k"),
-        F.col("c_r").alias("n"),
-        "c_t",
-        F.lit(None).cast("double").alias("lr_weight"),
-    )
-    return score_leg.unionByName(index_leg)
-
-
-INCREMENTAL_DSIR_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-),
-feats AS (
-  SELECT doc_id, source,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {DSIR_BUCKETS}) AS b
-  FROM (
-    SELECT doc_id, source,
-           unnest(list_concat(t,
-             list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                            i -> t[i] || ' ' || t[i + 1]))) AS f
-    FROM tok
-  )
-),
-idx1 AS (
-  SELECT b, count(*) AS c_r,
-         sum(CASE WHEN source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END)
-           AS c_t
-  FROM feats WHERE doc_id % 10 < {INC_B1_LT} GROUP BY b
-),
-tot1 AS (SELECT sum(c_r) AS tot_r, sum(c_t) AS tot_t FROM idx1),
-lr1 AS (
-  SELECT b,
-         {sql_exact_round(
-             f"ln((c_t + 0.5) / (tot_t + {0.5 * DSIR_BUCKETS}))"
-             f" - ln((c_r + 0.5) / (tot_r + {0.5 * DSIR_BUCKETS}))", 9)}
-           AS lr
-  FROM idx1, tot1
-),
-f2 AS (
-  SELECT doc_id + {INC_OFFSET} AS doc_id, source, b
-  FROM feats WHERE doc_id % 10 >= {INC_B2_GE}
-),
-scores AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-         cast(sum(cast(lr AS DECIMAL(28,9))) AS DOUBLE) AS lr_weight
-  FROM f2 JOIN lr1 USING (b) GROUP BY doc_id
-),
-cnt2 AS (
-  SELECT b, count(*) AS c_r,
-         sum(CASE WHEN source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END)
-           AS c_t
-  FROM f2 GROUP BY b
-),
-idx_after AS (
-  SELECT coalesce(i.b, c.b) AS b,
-         CAST(coalesce(i.c_r, 0) + coalesce(c.c_r, 0) AS BIGINT) AS c_r,
-         CAST(coalesce(i.c_t, 0) + coalesce(c.c_t, 0) AS BIGINT) AS c_t
-  FROM idx1 i FULL OUTER JOIN cnt2 c ON i.b = c.b
-)
-SELECT 'batch_score' AS variant, doc_id AS k, n_feats AS n,
-       CAST(NULL AS BIGINT) AS c_t, lr_weight
-FROM scores
-UNION ALL
-SELECT 'index_after', b, c_r, c_t, CAST(NULL AS DOUBLE)
-FROM idx_after
 """
 
 # --- Hashed logistic quality classifier --------------------------------------
@@ -894,7 +671,7 @@ CALIB_BINS = 10
 
 def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + ECE over the in-engine trained quality
-    classifier (pre-built r13; ``operators/corpus.py:
+    classifier (``operators/corpus.py:
     calibration_bins`` composed on ``train_quality_classifier``):
     ten score-decile bins each reporting mean predicted probability
     vs observed positive fraction, every row carrying the corpus
@@ -939,7 +716,7 @@ FROM g CROSS JOIN tot
 
 def quality_classifier_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier + calibration in ONE slot off ONE training chain
-    (pre-built r13, the bpe_suite consolidation pattern): the
+    (the suite consolidation pattern): the
     in-engine trained scored frame is cached once; variant 'scored'
     carries every doc's (y, n_feats, score, pred) verbatim and
     variant 'calib' carries the reliability bins + ECE — the
@@ -1012,78 +789,10 @@ FROM g CROSS JOIN tot
 # --- DoReMi-style domain mixture reweighting --------------------------------
 
 DR_BUCKETS = 64
-DR_ITERS = 3
-DR_ETA = 1.0
-DR_SMOOTH = 0.2
 
 
-def domain_reweight_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DoReMi-style domain mixture reweighting (pre-built r13;
-    ``operators/corpus.py:domain_reweight``): three unrolled
-    multiplicative-weights rounds where the proxy is the α-weighted
-    mixture of per-source hashed-bigram bucket LMs and each source's
-    excess loss is its cross-entropy under the mixture minus under
-    its own LM.  Sources whose text the shared mixture models worst
-    earn weight — the domain-mixture optimizer a pre-training data
-    pipeline runs before sampling.
-
-    Scale: ONE fused hash-agg collapses the corpus to the
-    (sources × {DR_BUCKETS})-bucket count grid; the whole optimization
-    loop runs on that cached statistics frame with broadcast-only
-    joins — the corpus is read exactly once."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return corpus.domain_reweight(
-        docs,
-        domain_col="source",
-        n_buckets=DR_BUCKETS,
-        n_iters=DR_ITERS,
-        eta=DR_ETA,
-        smooth=DR_SMOOTH,
-    )
-
-
-def _dr_iter_block(i: int) -> str:
-    """One multiplicative-weights round as CTEs (the _qc_iter_block
-    unrolling pattern): mixture LM under a{i-1}, per-source
-    cross-entropy, clipped excess vs the own-LM floor, exponentiated
-    re-normalized update."""
-    term = sql_exact_round("a.alpha * g.p_own", 9)
-    ex = sql_exact_round(f"exp({DR_ETA} * excess)", 9)
-    return f"""pm{i} AS (
-  SELECT g.b,
-         cast(sum(cast({term} AS DECIMAL(28,9))) AS DOUBLE) AS p_mix
-  FROM grid2 g JOIN a{i - 1} a USING (source) GROUP BY g.b
-),
-pmr{i} AS (SELECT b, {sql_exact_round("ln(p_mix)", 9)} AS lnp_mix
-           FROM pm{i}),
-lm{i} AS (
-  SELECT g.source,
-         - cast(sum(cast(g.c * p.lnp_mix AS DECIMAL(28,8))) AS DOUBLE)
-           / CAST(max(g.n_feats) AS DOUBLE) AS loss_mix
-  FROM grid2 g JOIN pmr{i} p USING (b) GROUP BY g.source
-),
-st{i} AS (
-  SELECT a.source, a.alpha, l.loss_mix,
-         greatest(l.loss_mix - o.loss_own, 0.0) AS excess
-  FROM a{i - 1} a JOIN lm{i} l USING (source) JOIN lown o USING (source)
-),
-r{i} AS (
-  SELECT source, loss_mix, excess,
-         {sql_exact_round(f"alpha * {ex}", 9)} AS raw
-  FROM st{i}
-),
-z{i} AS (SELECT cast(sum(cast(raw AS DECIMAL(28,9))) AS DOUBLE) AS z
-         FROM r{i}),
-a{i} AS (
-  SELECT source, loss_mix, excess,
-         {sql_exact_round(f"raw / (SELECT z FROM z{i})", 9)} AS alpha
-  FROM r{i}
-)"""
-
-
-# The shared (domain × bucket) LM-grid CTE chain — used verbatim by
-# DOMAIN_REWEIGHT_SQL and SOURCE_DIVERGENCE_SQL (mirrors
-# operators/corpus.py:domain_bucket_grid).
+# The (domain × bucket) LM-grid CTE chain used by SOURCE_DIVERGENCE_SQL
+# (mirrors operators/corpus.py:domain_bucket_grid).
 DOMAIN_GRID_CTES = f"""tok AS (
   SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
 ),
@@ -1115,43 +824,10 @@ grid AS (
   LEFT JOIN cnts c ON c.source = t.source AND c.b = gs.b
 )"""
 
-DOMAIN_REWEIGHT_SQL = f"""
-WITH {DOMAIN_GRID_CTES},
-nd AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-  FROM documents GROUP BY source
-),
-kk AS (SELECT CAST(count(*) AS BIGINT) AS k FROM tot),
-grid2 AS (
-  SELECT *, {sql_exact_round("ln(p_own)", 9)} AS lnp_own FROM grid
-),
-lown AS (
-  SELECT source,
-         - cast(sum(cast(c * lnp_own AS DECIMAL(28,8))) AS DOUBLE)
-           / CAST(max(n_feats) AS DOUBLE) AS loss_own
-  FROM grid2 GROUP BY source
-),
-a0 AS (
-  SELECT source, 1.0 / CAST((SELECT k FROM kk) AS DOUBLE) AS alpha
-  FROM tot
-),
-{",".join(_dr_iter_block(i) for i in range(1, DR_ITERS + 1))}
-SELECT t.source, nd.n_docs, t.n_feats, o.loss_own, a.loss_mix, a.excess,
-       a.alpha,
-       {sql_exact_round(
-           f"{1.0 - DR_SMOOTH} * a.alpha"
-           f" + {DR_SMOOTH} / CAST((SELECT k FROM kk) AS DOUBLE)", 9)}
-         AS weight
-FROM tot t
-JOIN nd USING (source)
-JOIN lown o USING (source)
-JOIN a{DR_ITERS} a USING (source)
-"""
-
 
 def source_divergence_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Jensen–Shannon divergence between every two sources'
-    hashed-bigram bucket LMs (pre-built r13; ``operators/corpus.py:
+    hashed-bigram bucket LMs (``operators/corpus.py:
     source_divergence_matrix``) — the distributional twin of
     ``source_overlap_matrix``: overlap catches copied documents, this
     catches crawls that merely WRITE alike.  One row per unordered
@@ -1182,562 +858,6 @@ terms AS (
 SELECT source_a, source_b,
        cast(sum(cast(t AS DECIMAL(28,9))) AS DOUBLE) AS js_div
 FROM terms GROUP BY source_a, source_b
-"""
-
-# --- Zipf-law corpus fingerprint --------------------------------------------
-
-ZIPF_TOP_N = 100
-
-
-def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law fit over the corpus token ranking (pre-built r13;
-    ``operators/text.py:zipf_fit``): the top-100 tokens with their
-    exact counts, the in-engine OLS of ln freq on ln rank (natural
-    text: slope ≈ −1 — drift toward 0 flags boilerplate, past −1.5
-    vocabulary collapse), and the exact (n_tokens, vocab_size)
-    Heaps coordinates.  One word-count exchange + a TakeOrdered
-    top-100 pull; the regression runs on the bounded 100-row frame."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return text.zipf_fit(docs, top_n=ZIPF_TOP_N)
-
-
-ZIPF_FIT_SQL = f"""
-WITH toks AS (
-  SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-),
-tf AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c
-  FROM toks WHERE tok <> '' GROUP BY tok
-),
-tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS vocab_size
-  FROM tf
-),
-ranked AS (
-  SELECT tok, c,
-         CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS k
-  FROM tf
-  ORDER BY c DESC, tok ASC LIMIT {ZIPF_TOP_N}
-),
-xy AS (
-  SELECT k, tok, c,
-         {sql_exact_round("ln(CAST(k AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(c AS DOUBLE))", 9)} AS y
-  FROM ranked
-),
-{text.sql_ols_ctes("xy", "x", "y")}
-SELECT 'top' AS variant, k, tok, c AS n,
-       CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2,
-       CAST(NULL AS DOUBLE) AS v3
-FROM xy
-UNION ALL
-SELECT 'fit', CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
-       CAST(NULL AS BIGINT), slope, intercept, r2
-FROM fit
-UNION ALL
-SELECT 'totals', n_tokens, CAST(NULL AS VARCHAR), vocab_size,
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM tot
-"""
-
-# --- Water-filling token-budget quotas --------------------------------------
-
-QUOTA_BUDGET = 22000.0
-QUOTA_ROUNDS = 3
-
-
-def token_quota_plan_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Water-filling quota realization (pre-built r13;
-    ``operators/corpus.py:token_quota_plan``): per-source available
-    tokens from one corpus aggregate, a deterministic skewed weight
-    (sqrt-temperature × an md5-derived 1–5 multiplier so the capping
-    branch actually exercises at the driver scale), and a fixed
-    22000-token budget allocated by 3 water-filling rounds — capped sources take their availability, surplus re-flows
-    by renormalized weight.  The step between mixture weights
-    (DoReMi / temperature) and a sampler that cannot draw tokens a
-    source does not have."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    av = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " ")).cast("long")).alias(
-            "avail_tokens"
-        )
-    )
-    mult = (
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col("source")), 1, 2), 16, 10
-            ).cast("int"),
-            F.lit(5),
-        )
-        + 1
-    )
-    weighted = av.withColumn(
-        "weight",
-        exact_round(
-            F.sqrt(F.col("avail_tokens").cast("double"))
-            * mult.cast("double"),
-            9,
-        ),
-    )
-    return corpus.token_quota_plan(
-        weighted, budget=QUOTA_BUDGET, n_rounds=QUOTA_ROUNDS
-    )
-
-
-def _wf_round_block(i: int, budget: float) -> str:
-    share = sql_exact_round("wn / wact", 9)
-    return f"""r{i} AS (
-  SELECT source, avail_tokens, wn,
-         CASE WHEN cap = 1 OR
-                   ({share}) * ({budget} - CAST(alloc AS DOUBLE))
-                   >= CAST(avail_tokens AS DOUBLE)
-              THEN 1 ELSE 0 END AS cap
-  FROM (
-    SELECT *,
-           sum(CASE WHEN cap = 1 THEN avail_tokens
-                    ELSE CAST(0 AS BIGINT) END) OVER () AS alloc,
-           cast(sum(CASE WHEN cap = 0
-                         THEN cast(wn AS DECIMAL(28,9)) END) OVER ()
-                AS DOUBLE) AS wact
-    FROM r{i - 1}
-  )
-)"""
-
-
-def _token_quota_sql() -> str:
-    b = QUOTA_BUDGET
-    share = sql_exact_round("wn / wact", 9)
-    rounds = ",\n".join(
-        _wf_round_block(i, b) for i in range(1, QUOTA_ROUNDS + 1)
-    )
-    return f"""
-WITH av AS (
-  SELECT source,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-           AS avail_tokens
-  FROM documents GROUP BY source
-),
-w0a AS (
-  SELECT source, avail_tokens,
-         {sql_exact_round(
-             "sqrt(CAST(avail_tokens AS DOUBLE))"
-             " * CAST(1 + (('0x' || substr(md5(source), 1, 2))::INT % 5)"
-             "       AS DOUBLE)", 9)} AS w
-  FROM av
-),
-r0 AS (
-  SELECT source, avail_tokens,
-         {sql_exact_round("w / wsum", 9)} AS wn, 0 AS cap
-  FROM (
-    SELECT *,
-           cast(sum(cast(w AS DECIMAL(28,9))) OVER () AS DOUBLE) AS wsum
-    FROM w0a
-  )
-),
-{rounds},
-fin AS (
-  SELECT *,
-         sum(CASE WHEN cap = 1 THEN avail_tokens
-                  ELSE CAST(0 AS BIGINT) END) OVER () AS alloc,
-         cast(sum(CASE WHEN cap = 0
-                       THEN cast(wn AS DECIMAL(28,9)) END) OVER ()
-              AS DOUBLE) AS wact
-  FROM r{QUOTA_ROUNDS}
-)
-SELECT source, avail_tokens, wn AS weight,
-       CASE WHEN cap = 1 THEN CAST(avail_tokens AS DOUBLE)
-            ELSE {sql_exact_round(
-                f"(({share}) * ({b} - CAST(alloc AS DOUBLE)))", 9)}
-       END AS quota,
-       cap AS capped
-FROM fin
-"""
-
-
-TOKEN_QUOTA_SQL = _token_quota_sql()
-
-# --- Mixture planning suite (reweight → quota, one chain) -------------------
-
-SUITE_QUOTA_BUDGET = 26000.0
-
-
-def mixture_planning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end mixture-planning chain in ONE spec (pre-built
-    r13): DoReMi multiplicative-weights reweighting decides the
-    per-source mixture, and the water-filling planner turns those
-    exact weights into realizable token quotas under availability
-    caps — optimizer → allocator, the two decisions a pre-training
-    data pipeline makes before any sampler draws.  Variant
-    'reweight' carries every ``domain_reweight_mixture`` cell
-    verbatim (cached once, the suite pattern); variant 'quota'
-    carries the allocation under a 26000-token budget sized so caps
-    exercise at the driver scale."""
-    rw = domain_reweight_mixture(spark, sf_dir).cache()
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    av = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " ")).cast("long")).alias(
-            "avail_tokens"
-        )
-    )
-    plan = corpus.token_quota_plan(
-        av.join(rw.select("source", "weight"), "source"),
-        budget=SUITE_QUOTA_BUDGET,
-        n_rounds=QUOTA_ROUNDS,
-    )
-    nl = F.lit(None).cast("long")
-    nd_ = F.lit(None).cast("double")
-    r_leg = rw.select(
-        F.lit("reweight").alias("variant"),
-        F.col("source").alias("s"),
-        F.col("n_docs").alias("n1"),
-        F.col("n_feats").alias("n2"),
-        F.col("loss_own").alias("v1"),
-        F.col("loss_mix").alias("v2"),
-        F.col("excess").alias("v3"),
-        F.col("alpha").alias("v4"),
-        F.col("weight").alias("v5"),
-        nd_.alias("v6"),
-    )
-    q_leg = plan.select(
-        F.lit("quota").alias("variant"),
-        F.col("source").alias("s"),
-        F.col("avail_tokens").alias("n1"),
-        F.col("capped").cast("long").alias("n2"),
-        nd_.alias("v1"),
-        nd_.alias("v2"),
-        nd_.alias("v3"),
-        nd_.alias("v4"),
-        F.col("weight").alias("v5"),
-        F.col("quota").alias("v6"),
-    )
-    return r_leg.unionByName(q_leg)
-
-
-def _mixture_planning_sql() -> str:
-    b = SUITE_QUOTA_BUDGET
-    share = sql_exact_round("wn / wact", 9)
-    rounds = ",\n".join(
-        _wf_round_block(i, b) for i in range(1, QUOTA_ROUNDS + 1)
-    )
-    return f"""
-WITH rw AS MATERIALIZED ({DOMAIN_REWEIGHT_SQL}),
-av AS (
-  SELECT source,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-           AS avail_tokens
-  FROM documents GROUP BY source
-),
-w0a AS (
-  SELECT av.source, av.avail_tokens,
-         {sql_exact_round("rw.weight", 9)} AS w
-  FROM av JOIN rw USING (source)
-),
-r0 AS (
-  SELECT source, avail_tokens,
-         {sql_exact_round("w / wsum", 9)} AS wn, 0 AS cap
-  FROM (
-    SELECT *,
-           cast(sum(cast(w AS DECIMAL(28,9))) OVER () AS DOUBLE) AS wsum
-    FROM w0a
-  )
-),
-{rounds},
-fin AS (
-  SELECT *,
-         sum(CASE WHEN cap = 1 THEN avail_tokens
-                  ELSE CAST(0 AS BIGINT) END) OVER () AS alloc,
-         cast(sum(CASE WHEN cap = 0
-                       THEN cast(wn AS DECIMAL(28,9)) END) OVER ()
-              AS DOUBLE) AS wact
-  FROM r{QUOTA_ROUNDS}
-)
-SELECT 'reweight' AS variant, source AS s, n_docs AS n1, n_feats AS n2,
-       loss_own AS v1, loss_mix AS v2, excess AS v3, alpha AS v4,
-       weight AS v5, CAST(NULL AS DOUBLE) AS v6
-FROM rw
-UNION ALL
-SELECT 'quota', source, avail_tokens, CAST(cap AS BIGINT),
-       NULL, NULL, NULL, NULL, wn,
-       CASE WHEN cap = 1 THEN CAST(avail_tokens AS DOUBLE)
-            ELSE {sql_exact_round(
-                f"(({share}) * ({b} - CAST(alloc AS DOUBLE)))", 9)}
-       END
-FROM fin
-"""
-
-
-MIXTURE_PLANNING_SQL = _mixture_planning_sql()
-
-# --- Heaps-law vocabulary growth --------------------------------------------
-
-
-def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps-law vocabulary growth (pre-built r13;
-    ``operators/text.py:vocab_growth``): 16 md5-nibble corpus-prefix
-    checkpoints, each token attributed to its FIRST-occurrence bucket
-    (one min-aggregate per token — no per-checkpoint distinct), the
-    cumulative (docs, tokens, vocab) curve, and the in-engine Heaps
-    fit ln V = ln K + β·ln N.  β → 1 = the corpus keeps minting
-    vocabulary (OOV pressure for a fixed tokenizer), β → 0 =
-    saturation: more data buys no new words — the data-scaling
-    signal read next to the Zipf slope."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return text.vocab_growth(docs)
-
-
-VOCAB_GROWTH_SQL = f"""
-WITH base AS (
-  SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 1))::INT AS b,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-         string_split(text, ' ') AS toks
-  FROM documents
-),
-doc_agg AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS nd, CAST(sum(nt) AS BIGINT) AS nt
-  FROM base GROUP BY b
-),
-tok_first AS (
-  SELECT fb AS b, CAST(count(*) AS BIGINT) AS nv FROM (
-    SELECT tok, min(b) AS fb FROM (
-      SELECT b, unnest(toks) AS tok FROM base
-    ) WHERE tok <> '' GROUP BY tok
-  ) GROUP BY fb
-),
-spine AS (SELECT unnest(generate_series(0, 15)) AS b),
-curve AS (
-  SELECT s.b,
-         CAST(sum(coalesce(d.nd, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_docs,
-         CAST(sum(coalesce(d.nt, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_tokens,
-         CAST(sum(coalesce(t.nv, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
-  FROM spine s
-  LEFT JOIN doc_agg d USING (b)
-  LEFT JOIN tok_first t USING (b)
-),
-xy AS (
-  SELECT {sql_exact_round("ln(CAST(n_tokens AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(vocab AS DOUBLE))", 9)} AS y
-  FROM curve WHERE n_tokens > 0 AND vocab > 0
-),
-{text.sql_ols_ctes("xy", "x", "y")}
-SELECT 'curve' AS variant, CAST(b AS BIGINT) AS k, n_docs, n_tokens,
-       vocab, CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2,
-       CAST(NULL AS DOUBLE) AS v3
-FROM curve
-UNION ALL
-SELECT 'fit', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), slope, intercept, r2
-FROM fit
-"""
-
-# --- Token-stats suite (Zipf + Heaps off one shared aggregate) --------------
-
-
-def token_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf fingerprint + Heaps growth in ONE slot off ONE shared
-    aggregate (pre-built r13): the exploded token stream folds ONCE
-    into ``(token → count, first-bucket)`` — the count column feeds
-    the Zipf ranking/fit/totals, the first-bucket column feeds the
-    Heaps curve/fit — so the two corpus-statistics specs' cells come
-    from a single wordcount exchange instead of two.  Every leg's
-    cells are bit-identical to the standalone specs
-    (parts-equivalence pinned).  Legs: 'top' (k=rank, tok, n=count),
-    'zipf_fit' / 'heaps_fit' (v1=slope, v2=intercept, v3=r2),
-    'totals' (k=n_tokens, n=vocab_size), 'curve' (k=checkpoint,
-    n=n_docs, n2=n_tokens, n3=vocab)."""
-    from pyspark.sql import Window
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    nib = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-    ).cast("int")
-    base = docs.select(
-        nib.alias("b"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("__nt"),
-        F.split(F.col("text"), " ").alias("__toks"),
-    )
-    tf = (
-        base.select("b", F.explode("__toks").alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"), F.min("b").alias("fb"))
-        .cache()
-    )
-    totals = tf.agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab_size"),
-    )
-    top = tf.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(
-        ZIPF_TOP_N
-    )
-    wz = Window.orderBy(F.col("c").desc(), F.col("tok").asc())
-    ranked = (
-        top.withColumn("k", F.row_number().over(wz).cast("long"))
-        .withColumn(
-            "x", exact_round(F.log(F.col("k").cast("double")), 9)
-        )
-        .withColumn(
-            "y", exact_round(F.log(F.col("c").cast("double")), 9)
-        )
-        .cache()
-    )
-    zfit = text.ols_fit(ranked, "x", "y")
-
-    doc_agg = base.groupBy("b").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("__nt").alias("nt")
-    )
-    tok_first = tf.groupBy("fb").agg(F.count(F.lit(1)).alias("nv"))
-    spine = docs.agg(F.count(F.lit(1)).alias("__n")).select(
-        F.explode(F.sequence(F.lit(0), F.lit(15))).alias("b")
-    )
-    wc = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    curve = (
-        spine.join(F.broadcast(doc_agg), "b", "left")
-        .join(
-            F.broadcast(tok_first.withColumnRenamed("fb", "b")),
-            "b",
-            "left",
-        )
-        .na.fill({"nd": 0, "nt": 0, "nv": 0})
-        .select(
-            "b",
-            F.sum("nd").over(wc).alias("n_docs"),
-            F.sum("nt").over(wc).alias("n_tokens"),
-            F.sum("nv").over(wc).alias("vocab"),
-        )
-        .cache()
-    )
-    pts = curve.where(
-        (F.col("n_tokens") > 0) & (F.col("vocab") > 0)
-    ).select(
-        exact_round(F.log(F.col("n_tokens").cast("double")), 9).alias("x"),
-        exact_round(F.log(F.col("vocab").cast("double")), 9).alias("y"),
-    )
-    hfit = text.ols_fit(pts, "x", "y")
-
-    nl = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    nd_ = F.lit(None).cast("double")
-
-    def _leg(df, variant, **cols):
-        out = [F.lit(variant).alias("variant")]
-        for name in ("k", "tok", "n", "n2", "n3", "v1", "v2", "v3"):
-            if name in cols:
-                out.append(cols[name].alias(name))
-            elif name == "tok":
-                out.append(ns.alias(name))
-            elif name.startswith("v"):
-                out.append(nd_.alias(name))
-            else:
-                out.append(nl.alias(name))
-        return df.select(*out)
-
-    top_leg = _leg(
-        ranked, "top", k=F.col("k"), tok=F.col("tok"), n=F.col("c")
-    )
-    zfit_leg = _leg(
-        zfit, "zipf_fit",
-        v1=F.col("slope"), v2=F.col("intercept"), v3=F.col("r2"),
-    )
-    tot_leg = _leg(
-        totals, "totals", k=F.col("n_tokens"), n=F.col("vocab_size")
-    )
-    curve_leg = _leg(
-        curve, "curve",
-        k=F.col("b").cast("long"), n=F.col("n_docs"),
-        n2=F.col("n_tokens"), n3=F.col("vocab"),
-    )
-    hfit_leg = _leg(
-        hfit, "heaps_fit",
-        v1=F.col("slope"), v2=F.col("intercept"), v3=F.col("r2"),
-    )
-    return (
-        top_leg.unionByName(zfit_leg)
-        .unionByName(tot_leg)
-        .unionByName(curve_leg)
-        .unionByName(hfit_leg)
-    )
-
-
-TOKEN_STATS_SUITE_SQL = f"""
-WITH base AS (
-  SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 1))::INT AS b,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-         string_split(text, ' ') AS toks
-  FROM documents
-),
-tf AS MATERIALIZED (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c, min(b) AS fb FROM (
-    SELECT b, unnest(toks) AS tok FROM base
-  ) WHERE tok <> '' GROUP BY tok
-),
-tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS vocab_size
-  FROM tf
-),
-ranked AS (
-  SELECT tok, c,
-         CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS k
-  FROM tf
-  ORDER BY c DESC, tok ASC LIMIT {ZIPF_TOP_N}
-),
-zxy AS (
-  SELECT k, tok, c,
-         {sql_exact_round("ln(CAST(k AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(c AS DOUBLE))", 9)} AS y
-  FROM ranked
-),
-{text.sql_ols_ctes("zxy", "x", "y", names=("zs", "zfit"))},
-doc_agg AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS nd, CAST(sum(nt) AS BIGINT) AS nt
-  FROM base GROUP BY b
-),
-tok_first AS (
-  SELECT fb AS b, CAST(count(*) AS BIGINT) AS nv FROM tf GROUP BY fb
-),
-spine AS (SELECT unnest(generate_series(0, 15)) AS b),
-curve AS (
-  SELECT s.b,
-         CAST(sum(coalesce(d.nd, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_docs,
-         CAST(sum(coalesce(d.nt, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_tokens,
-         CAST(sum(coalesce(t.nv, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
-  FROM spine s
-  LEFT JOIN doc_agg d USING (b)
-  LEFT JOIN tok_first t USING (b)
-),
-hxy AS (
-  SELECT {sql_exact_round("ln(CAST(n_tokens AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(vocab AS DOUBLE))", 9)} AS y
-  FROM curve WHERE n_tokens > 0 AND vocab > 0
-),
-{text.sql_ols_ctes("hxy", "x", "y", names=("hs", "hfit"))}
-SELECT 'top' AS variant, k, tok, c AS n,
-       CAST(NULL AS BIGINT) AS n2, CAST(NULL AS BIGINT) AS n3,
-       CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2,
-       CAST(NULL AS DOUBLE) AS v3
-FROM zxy
-UNION ALL
-SELECT 'zipf_fit', NULL, NULL, NULL, NULL, NULL, slope, intercept, r2
-FROM zfit
-UNION ALL
-SELECT 'totals', n_tokens, NULL, vocab_size, NULL, NULL, NULL, NULL, NULL
-FROM tot
-UNION ALL
-SELECT 'curve', CAST(b AS BIGINT), NULL, n_docs, n_tokens, vocab,
-       NULL, NULL, NULL
-FROM curve
-UNION ALL
-SELECT 'heaps_fit', NULL, NULL, NULL, NULL, NULL, slope, intercept, r2
-FROM hfit
 """
 
 # --- Sequence packing -------------------------------------------------------
@@ -1784,35 +904,6 @@ def corpus_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus.domain_mix_sample(docs)
 
 
-CORPUS_DOMAIN_MIX_SQL = """
-WITH counts AS (
-  SELECT source, count(*) AS n_source FROM documents GROUP BY source
-),
-tot AS (
-  SELECT CAST(sum(n_source) AS BIGINT) AS n_total,
-         CAST(count(*) AS BIGINT) AS n_sources
-  FROM counts
-),
-rates AS (
-  SELECT source,
-         least(1.0, (n_total::DOUBLE / n_sources) / n_source) AS rate
-  FROM counts CROSS JOIN tot
-),
-d AS (
-  SELECT doc_id, source,
-         ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT::DOUBLE
-           / 4294967296.0 AS hash_frac
-  FROM documents
-)
-SELECT d.doc_id, d.source,
-       {hf} AS hash_frac,
-       {rt} AS rate,
-       d.hash_frac < rates.rate AS kept
-FROM d JOIN rates USING (source)
-""".format(
-    hf=sql_exact_round("d.hash_frac", 8), rt=sql_exact_round("rates.rate", 8)
-)
-
 # --- TF-IDF top terms -------------------------------------------------------
 
 TFIDF_TOPK = 3
@@ -1848,68 +939,9 @@ FROM ranked WHERE rank <= {TFIDF_TOPK}
 """
 
 
-# --- Lexical retrieval suite: TF-IDF terms + BM25 query retrieval (THE r20
-# --- trade, pre-built r09) ---------------------------------------------------
-
-BM25_QUERY_IDS = list(range(10))
-BM25_TOPK = 5
+# --- BM25 query retrieval ---------------------------------------------------
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def lexical_retrieval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexical family consolidation + BM25 debut: ONE cached
-    ``(doc_id, term, tf)`` pass serves the retiring
-    ``corpus_tfidf_topk``'s cells verbatim AND the new BM25 query
-    retrieval leg (``operators/corpus.py:bm25_topk`` — the lexical
-    complement of ``embedding_retrieval_suite``: the first 10 doc_ids
-    are the stand-in query set, each retrieving its BM25_TOPK best
-    non-self matches over the query-term posting lists).
-
-    Padded union shape ``(variant, k, txt, n, df, score, rank)``:
-    * 'tfidf' rows: k = doc_id, txt = term, n = tf, df = df,
-      score = tfidf — the retiring spec's cells verbatim;
-    * 'bm25' rows: k = query_id, txt = the retrieved doc_id as a
-      string, n = matched-query-term count, df = NULL, score = the
-      4-dp decimal-exact BM25 sum.
-
-    100 TB shape: the tf frame is the only corpus-wide pass (one
-    (doc,term) exchange), cached once; the TF-IDF leg adds its term
-    exchange, the BM25 leg is broadcast-query joins over the same
-    cache plus one doc-keyed length join — consolidation removes a
-    full duplicate explode of the corpus."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    terms = docs.select(
-        "doc_id", F.explode(text.tokens_col("text")).alias("term")
-    )
-    tf = (
-        terms.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
-    )
-    tfidf = corpus.tfidf_topk(docs, k=TFIDF_TOPK, tf_table=tf)
-    bm = corpus.bm25_topk(
-        docs, BM25_QUERY_IDS, k=BM25_TOPK, k1=BM25_K1, b=BM25_B, tf_table=tf
-    )
-    t = tfidf.select(
-        F.lit("tfidf").alias("variant"),
-        F.col("doc_id").alias("k"),
-        F.col("term").alias("txt"),
-        F.col("tf").alias("n"),
-        "df",
-        F.col("tfidf").alias("score"),
-        "rank",
-    )
-    q = bm.select(
-        F.lit("bm25").alias("variant"),
-        F.col("query_id").alias("k"),
-        F.col("doc_id").cast("string").alias("txt"),
-        F.col("n_terms").alias("n"),
-        F.lit(None).cast("long").alias("df"),
-        F.col("bm25").alias("score"),
-        "rank",
-    )
-    return t.unionByName(q)
 
 
 _BM25_IDF = sql_exact_round(
@@ -1920,64 +952,6 @@ _BM25_CONTRIB = (
     f"(tf + CAST({BM25_K1} AS DOUBLE) * ((1.0 - CAST({BM25_B} AS DOUBLE)) + "
     f"CAST({BM25_B} AS DOUBLE) * dl / (CAST(total_dl AS DOUBLE) / n_docs)))"
 )
-
-LEXICAL_RETRIEVAL_SQL = f"""
-WITH terms AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS MATERIALIZED (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM terms GROUP BY doc_id, term
-),
-docfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-            FROM tf GROUP BY term),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, docfreq.df,
-         {sql_exact_round('tf.tf * ln((n.n_docs + 1.0) / (docfreq.df + 1.0))', 4)}
-           AS tfidf
-  FROM tf JOIN docfreq USING (term) CROSS JOIN n
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (
-            PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS INT) AS rank
-  FROM scored
-),
-doclen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(dl) AS BIGINT) AS total_dl FROM doclen),
-qt AS (SELECT doc_id AS query_id, term FROM tf
-       WHERE doc_id IN ({", ".join(map(str, BM25_QUERY_IDS))})),
-qdf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
-        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY term),
-contrib AS (
-  SELECT q.query_id, t.doc_id,
-         {_BM25_CONTRIB} AS contrib
-  FROM tf t
-  JOIN qt q USING (term)
-  JOIN qdf USING (term)
-  JOIN doclen l ON l.doc_id = t.doc_id
-  CROSS JOIN stats
-  WHERE t.doc_id <> q.query_id
-),
-bm AS (
-  SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-         {sql_exact_sum('contrib', 4)} AS bm25
-  FROM contrib GROUP BY query_id, doc_id
-),
-bmr AS (
-  SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY bm25 DESC, doc_id ASC) AS INT)
-            AS rank
-  FROM bm
-)
-SELECT 'tfidf' AS variant, doc_id AS k, term AS txt, tf AS n, df,
-       tfidf AS score, rank
-FROM ranked WHERE rank <= {TFIDF_TOPK}
-UNION ALL
-SELECT 'bm25', query_id, CAST(doc_id AS VARCHAR), n_terms, NULL, bm25, rank
-FROM bmr WHERE rank <= {BM25_TOPK}
-"""
 
 # --- Hybrid retrieval: Reciprocal Rank Fusion --------------------------------
 
@@ -2008,9 +982,8 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     # cache the (doc, term, tf) frame: bm25_topk consumes it four ways
     # (query terms, query-vocab df, candidates, doc lengths) — without
-    # the cache each consumer re-explodes the corpus (the
-    # lexical_retrieval_suite discipline; measured 126s → ~45s at
-    # sf2.5)
+    # the cache each consumer re-explodes the corpus (measured 126s →
+    # ~45s at sf2.5)
     tf = (
         docs.select("doc_id", F.explode(text.tokens_col("text")).alias("term"))
         .groupBy("doc_id", "term")
@@ -2405,9 +1378,7 @@ def corpus_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cross-document span dedup (``corpus.span_dedup``): every
     distinct 10-token span keeps its global first occurrence only —
     the C4/RefinedWeb line-dedup stage for corpora without line
-    structure.  One shuffle on span text + one reassembly agg; r07
-    unit-first debut (differential in tests/test_corpus.py), r08+
-    registry candidate."""
+    structure.  One shuffle on span text + one reassembly agg."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     return corpus.span_dedup(docs, window=SPAN_WINDOW)
 
@@ -2445,7 +1416,7 @@ FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
 """
 
 
-# --- BPE merge training (r06 unit-first debut; r07+ registry candidate) -----
+# --- BPE merge training ------------------------------------------------------
 
 BPE_N_MERGES = 6
 
@@ -2536,8 +1507,7 @@ def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares strings, not array cells (tokens cannot contain spaces —
     they descend from whitespace-split words).
 
-    r07 unit-first debut (differential in tests/test_bpe.py), r08
-    registry candidate.  The oracle replays all BPE_N_MERGES training
+    The oracle replays all BPE_N_MERGES training
     rounds (the MATERIALIZED chain ``BPE_MERGES_SQL`` documents), then
     joins each word position against the final vocab with the
     character-fallback for OOV — OOV is impossible here (same corpus)
@@ -2593,93 +1563,6 @@ FROM documents d LEFT JOIN enc e ON e.doc_id = d.doc_id
 
 
 BPE_ENCODE_SQL = _bpe_encode_sql()
-
-
-def bpe_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE family consolidation (THE r18 trade, pre-built r09): train
-    the merge table ONCE and serve both retiring specs' cells from the
-    same chain — ``bpe_merges_documents`` re-ran the full
-    corpus-pass + vocab-round training that ``bpe_encode_documents``
-    also ran just to get its vocab (two trains ≈ 6.7s of r08 bench for
-    one artifact).  ``bpe_train(return_vocab=True)`` yields the merge
-    rows AND the fully-merged word→symbols lookup from one loop; the
-    encode leg is then a single broadcast vocab join.
-
-    Padded union shape: ``(variant, k, txt, n)`` —
-    * 'merges' rows: k = merge_rank, txt = 'left right merged'
-      (space-joined, symbols cannot contain whitespace — they descend
-      from whitespace-split words), n = pair_count;
-    * 'encode' rows: k = doc_id, txt = the space-joined token
-      sequence, n = n_tokens.
-    Both retiring specs' cell VALUES carry verbatim into txt/n.
-    """
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    merges, vocab = text.bpe_train(
-        docs, n_merges=BPE_N_MERGES, return_vocab=True
-    )
-    enc = text.bpe_encode(docs, vocab)
-    m = merges.select(
-        F.lit("merges").alias("variant"),
-        F.col("merge_rank").cast("long").alias("k"),
-        F.concat_ws(" ", "left_sym", "right_sym", "merged").alias("txt"),
-        F.col("pair_count").alias("n"),
-    )
-    e = enc.select(
-        F.lit("encode").alias("variant"),
-        F.col("doc_id").cast("long").alias("k"),
-        F.array_join("tokens", " ").alias("txt"),
-        F.col("n_tokens").alias("n"),
-    )
-    return m.unionByName(e)
-
-
-def _bpe_suite_sql() -> str:
-    rounds = ",".join(_bpe_iter_block(i) for i in range(BPE_N_MERGES))
-    merge_rows = "\nUNION ALL\n".join(
-        f"SELECT 'merges' AS variant, {i + 1}::BIGINT AS k,"
-        f" a || ' ' || b || ' ' || a || b AS txt,"
-        f" cnt::BIGINT AS n FROM best{i}"
-        for i in range(BPE_N_MERGES)
-    )
-    return f"""
-WITH words AS MATERIALIZED (
-  SELECT w, count(*)::BIGINT AS freq
-  FROM (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS w FROM documents)
-  WHERE w <> '' GROUP BY w
-),
-v0 AS MATERIALIZED (
-  SELECT w, freq,
-         list_append(list_transform(generate_series(1, length(w)), x -> w[x]),
-                     '</w>') AS s
-  FROM words
-),
-{rounds.lstrip()},
-tokpos AS MATERIALIZED (
-  SELECT doc_id, j AS wpos, toks[j] AS w
-  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
-        FROM documents) d,
-       unnest(generate_series(1, len(toks))) AS t(j)
-  WHERE toks[j] <> ''
-),
-enc AS (
-  SELECT tp.doc_id,
-         flatten(list(coalesce(v.s,
-           list_append(list_transform(generate_series(1, length(tp.w)),
-                                      x -> tp.w[x]), '</w>'))
-           ORDER BY tp.wpos)) AS tokens
-  FROM tokpos tp LEFT JOIN v{BPE_N_MERGES} v ON v.w = tp.w
-  GROUP BY tp.doc_id
-)
-{merge_rows}
-UNION ALL
-SELECT 'encode', d.doc_id,
-       coalesce(array_to_string(e.tokens, ' '), ''),
-       coalesce(len(e.tokens), 0)::BIGINT
-FROM documents d LEFT JOIN enc e ON e.doc_id = d.doc_id
-"""
-
-
-BPE_SUITE_SQL = _bpe_suite_sql()
 
 
 # --- Training-corpus capstone lineage report (r08 driver row) ----------------
@@ -2802,8 +1685,7 @@ SELECT (SELECT count(*) FROM documents)::BIGINT AS n_input,
 TRAINING_CORPUS_REPORT_SQL = _training_corpus_report_sql()
 
 
-# --- Export suite: token-budget capping + seeded shuffle-shard (r09
-# --- registry candidate, unit-first per the r08 window arithmetic) ----------
+# --- Export suite: token-budget capping + seeded shuffle-shard ---------------
 
 EXPORT_TOKEN_BUDGET = 700   # ~half of each sf0.01 source's ~1.3K tokens
 EXPORT_N_SHARDS = 8
@@ -2895,8 +1777,7 @@ SELECT * FROM budget UNION ALL SELECT * FROM shuf
 """
 
 
-# --- Mix suite: uniform + temperature domain rebalancing (r10 registry
-# --- candidate — the consolidation that retires corpus_domain_mix) ----------
+# --- Mix suite: uniform + temperature domain rebalancing ---------------------
 
 MIX_ALPHA = 0.5
 
@@ -2904,17 +1785,15 @@ MIX_ALPHA = 0.5
 def corpus_mix_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The domain-mixing family under one suite shape: the uniform
     target (``domain_mix_sample`` — exactly ``temperature_mix_sample``
-    at alpha = 0, kept as its own variant so the retiring spec's every
-    output cell carries through) UNION the temperature rule at
+    at alpha = 0, kept as its own variant) UNION the temperature rule at
     alpha = 0.5 (target share ∝ sqrt(n_s); the sqrt/decimal-sum path
     is IEEE-exact per term, see the operator docstring).  Identical
     column sets — no pads, just the variant tag.
 
-    The uniform variant mixes the FULL corpus — the retiring spec's
-    every output cell carries verbatim, the consolidation contract.
-    The temperature variant mixes the ``doc_id % 3 != 0`` subset:
-    the synthetic corpus assigns sources perfectly evenly (every
-    source exactly n/20 docs), which would pin every rate at the
+    The uniform variant mixes the FULL corpus.  The temperature
+    variant mixes the ``doc_id % 3 != 0`` subset: the synthetic corpus
+    assigns sources perfectly evenly (every source exactly n/20 docs),
+    which would pin every rate at the
     capped 1.0 and leave the threshold compare untested — the filter
     skews counts to 16/17-ish per source so sub-1.0 rates and
     dropped rows actually occur (both kept values asserted in the
@@ -3004,302 +1883,6 @@ FROM d JOIN trates USING (source)
 )
 
 
-
-
-# --- Coverage-maximizing source selection (submodular greedy) ----------------
-#
-# Unit-first pre-build (r13): registers when an r15+ slot frees.  The
-# Spark side collapses the corpus to the exact (mask, cnt) coverage
-# summary (bounded by 2^|sources| — see operators/corpus.py) and runs
-# the greedy on the driver; the oracle UNROLLS the same greedy as
-# K nested argmax CTEs over the identical mask table (the
-# corpus_quality_classifier unrolled-GD precedent), so every gain is
-# an exact integer and the single coverage division matches bitwise.
-
-COVERAGE_K_SELECT = 5
-COVERAGE_NGRAM_K = 3
-
-
-def source_coverage_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return corpus.source_coverage_greedy(
-        docs, k_select=COVERAGE_K_SELECT, ngram_k=COVERAGE_NGRAM_K
-    )
-
-
-def _source_coverage_sql() -> str:
-    shift = "(CAST(1 AS BIGINT) << s.idx)"
-    ctes = [
-        "tok AS (SELECT source, string_split(text, ' ') AS tok\n"
-        "  FROM documents WHERE source IS NOT NULL AND text IS NOT NULL)",
-        "pairs AS (SELECT source, ng\n"
-        f"  FROM tok, UNNEST({sql_shingles('tok', COVERAGE_NGRAM_K)})"
-        " AS u(ng))",
-        "sidx AS (SELECT source,\n"
-        "  CAST(row_number() OVER (ORDER BY source) - 1 AS BIGINT) AS idx\n"
-        "  FROM (SELECT DISTINCT source FROM documents"
-        " WHERE source IS NOT NULL))",
-        "ngmask AS (SELECT ng,\n"
-        "  CAST(bit_or(CAST(1 AS BIGINT) << sidx.idx) AS BIGINT) AS mask\n"
-        "  FROM pairs JOIN sidx USING (source) GROUP BY ng)",
-        "mc AS (SELECT mask, CAST(count(*) AS BIGINT) AS cnt"
-        " FROM ngmask GROUP BY mask)",
-        "tot AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS total"
-        " FROM mc)",
-    ]
-    prev_picked = "CAST(0 AS BIGINT)"
-    prev_covered = "CAST(0 AS BIGINT)"
-    finals = []
-    for i in range(1, COVERAGE_K_SELECT + 1):
-        if i == 1:
-            g = (
-                f"g{i} AS (SELECT s.source, s.idx,\n"
-                f"  CAST(coalesce(SUM(CASE WHEN (m.mask & {shift}) <> 0"
-                f" THEN m.cnt END), 0) AS BIGINT) AS gain\n"
-                "  FROM sidx s LEFT JOIN mc m ON TRUE\n"
-                "  GROUP BY s.source, s.idx)"
-            )
-            p = (
-                f"p{i} AS (SELECT source, gain,\n"
-                f"  ({prev_picked} | (CAST(1 AS BIGINT) << idx)) AS picked,\n"
-                f"  ({prev_covered} + gain) AS covered\n"
-                f"  FROM g{i} ORDER BY gain DESC, source LIMIT 1)"
-            )
-        else:
-            g = (
-                f"g{i} AS (SELECT s.source, s.idx, p.picked AS prev_picked,"
-                " p.covered AS prev_covered,\n"
-                f"  CAST(coalesce(SUM(CASE WHEN (m.mask & {shift}) <> 0"
-                " AND (m.mask & p.picked) = 0"
-                f" THEN m.cnt END), 0) AS BIGINT) AS gain\n"
-                f"  FROM sidx s CROSS JOIN p{i - 1} p"
-                " LEFT JOIN mc m ON TRUE\n"
-                f"  WHERE (p.picked & {shift}) = 0\n"
-                "  GROUP BY s.source, s.idx, p.picked, p.covered)"
-            )
-            p = (
-                f"p{i} AS (SELECT source, gain,\n"
-                "  (prev_picked | (CAST(1 AS BIGINT) << idx)) AS picked,\n"
-                "  (prev_covered + gain) AS covered\n"
-                f"  FROM g{i} ORDER BY gain DESC, source LIMIT 1)"
-            )
-        ctes.append(g)
-        ctes.append(p)
-        finals.append(
-            f"SELECT CAST({i} AS INT) AS sel_rank, p{i}.source, p{i}.gain,"
-            f" p{i}.covered,\n"
-            "  CASE WHEN tot.total = 0 THEN 0.0"
-            f" ELSE CAST(p{i}.covered AS DOUBLE) / CAST(tot.total AS DOUBLE)"
-            f" END AS coverage_frac\n  FROM p{i} CROSS JOIN tot"
-        )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL\n".join(finals)
-    )
-
-
-SOURCE_COVERAGE_SQL = _source_coverage_sql()
-
-
-
-# --- Incremental coverage (SEVENTH incremental-ingest family; r13) -----------
-#
-# The coverage index (ng → source bitmask) is MERGEABLE with bit_or —
-# associative, commutative, IDEMPOTENT — so it rides the generic
-# streaming accumulator loop (``start_cms_stream`` with
-# ``merge_expr=F.bit_or``) with append-only per-batch segments and
-# replay immunity stronger than the CMS's (_SUCCESS guards replays;
-# bit_or would forgive them anyway).  Per-batch cost is the batch's
-# own shingle pass plus the bounded summary refresh — the corpus is
-# never re-read; state grows with DISTINCT ngrams (the dedup-index
-# contrast; the DSIR sibling is the O(1)-state one).  The fresh spec
-# proves the accrual law end-to-end: the greedy over the two-batch
-# accrued index must EQUAL the one-shot full-corpus greedy (the
-# standard %10 batch split covers every doc with a 20% re-ingest
-# overlap), so the greedy leg's oracle is SOURCE_COVERAGE_SQL
-# reused verbatim; the novelty leg reports what batch 2 actually
-# added per source — the per-ingest readout a curation loop watches.
-
-
-def incremental_coverage_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extended_queries import _inc_batches
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    srcs = corpus.coverage_sources(docs)
-    b1, b2 = _inc_batches(docs)
-    idx1 = corpus.ngram_masks(b1, srcs, ngram_k=COVERAGE_NGRAM_K).cache()
-    idx2 = corpus.ngram_masks(b2, srcs, ngram_k=COVERAGE_NGRAM_K).cache()
-    accrued = (
-        idx1.unionByName(idx2)
-        .groupBy("ng")
-        .agg(F.bit_or("mask").alias("mask"))
-    )
-    greedy = corpus.greedy_from_summary(
-        spark, corpus.masks_summary(accrued), srcs, COVERAGE_K_SELECT
-    ).select(
-        F.lit("greedy").alias("variant"),
-        "sel_rank",
-        "source",
-        "gain",
-        "covered",
-        "coverage_frac",
-    )
-    new2 = idx2.join(idx1, "ng", "left_anti")
-    new_summary = corpus.masks_summary(new2).collect()
-    novelty_rows = []
-    for i, s in enumerate(srcs):
-        bit = 1 << i
-        novelty_rows.append(
-            (s, sum(r["cnt"] for r in new_summary if r["mask"] & bit))
-        )
-    novelty = local_rows_df(
-        spark, novelty_rows, "source string, gain bigint"
-    ).select(
-        F.lit("batch_novelty").alias("variant"),
-        F.lit(None).cast("int").alias("sel_rank"),
-        "source",
-        "gain",
-        F.lit(None).cast("bigint").alias("covered"),
-        F.lit(None).cast("double").alias("coverage_frac"),
-    )
-    return greedy.unionByName(novelty)
-
-
-def _incremental_coverage_sql() -> str:
-    sh = sql_shingles("tok", COVERAGE_NGRAM_K)
-    return f"""
-WITH greedy_leg AS ({SOURCE_COVERAGE_SQL}),
-itok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS tok
-  FROM documents WHERE source IS NOT NULL AND text IS NOT NULL
-),
-ng1 AS (
-  SELECT DISTINCT ng FROM itok, UNNEST({sh}) AS u(ng)
-  WHERE doc_id % 10 < {{b1}}
-),
-p2 AS (
-  SELECT DISTINCT source, ng FROM itok, UNNEST({sh}) AS u(ng)
-  WHERE doc_id % 10 >= {{b2}}
-),
-delta AS (
-  SELECT p2.source, CAST(count(DISTINCT p2.ng) AS BIGINT) AS gain
-  FROM p2 LEFT JOIN ng1 ON p2.ng = ng1.ng
-  WHERE ng1.ng IS NULL
-  GROUP BY p2.source
-),
-allsrc AS (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL)
-SELECT 'greedy' AS variant, sel_rank, source, gain, covered, coverage_frac
-FROM greedy_leg
-UNION ALL
-SELECT 'batch_novelty', CAST(NULL AS INT), allsrc.source,
-       CAST(coalesce(delta.gain, 0) AS BIGINT),
-       CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-FROM allsrc LEFT JOIN delta ON allsrc.source = delta.source
-""".format(b1=INC_B1_LT, b2=INC_B2_GE)
-
-
-INCREMENTAL_COVERAGE_SQL = _incremental_coverage_sql()
-
-
-# --- Tokenizer fertility stats (r13 pre-build; BPE-family widening) ----------
-#
-# The tokenizer-health report every multilingual pipeline watches:
-# per-language FERTILITY (BPE tokens per whitespace word — how many
-# subwords a word fragments into) and compression (word chars per
-# token).  A language whose fertility runs hot is under-served by the
-# vocab (its words shatter to characters), the signal behind vocab
-# re-budgeting.  Reuses the trained encode chain (BPE_ENCODE_SQL as a
-# CTE) — no new tokenizer machinery; all aggregates are exact-integer
-# sums with ONE IEEE division each, so the ratios are cross-engine
-# bitwise.
-
-
-def tokenizer_fertility_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    _, vocab = text.bpe_train(
-        docs, n_merges=BPE_N_MERGES, return_vocab=True
-    )
-    enc = text.bpe_encode(docs, vocab).select("doc_id", "n_tokens")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "\\s+"), lambda w: w != ""
-    )
-    meta = docs.where(F.col("lang").isNotNull()).select(
-        "doc_id",
-        "lang",
-        F.greatest(F.size(toks), F.lit(0)).alias("n_words"),
-        F.coalesce(
-            F.aggregate(
-                toks,
-                F.lit(0).cast("long"),
-                lambda acc, w: acc + F.length(w),
-            ),
-            F.lit(0).cast("long"),
-        ).alias("n_chars"),
-    )
-    agg = (
-        meta.join(enc, "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("n_words"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_chars").alias("n_chars"),
-        )
-    )
-    return agg.select(
-        "lang",
-        "n_docs",
-        "n_words",
-        "n_tokens",
-        "n_chars",
-        F.when(F.col("n_words") == 0, F.lit(0.0))
-        .otherwise(
-            F.col("n_tokens").cast("double") / F.col("n_words").cast("double")
-        )
-        .alias("fertility"),
-        F.when(F.col("n_tokens") == 0, F.lit(0.0))
-        .otherwise(
-            F.col("n_chars").cast("double") / F.col("n_tokens").cast("double")
-        )
-        .alias("chars_per_token"),
-    )
-
-
-def _tokenizer_fertility_sql() -> str:
-    return f"""
-WITH enc_out AS MATERIALIZED ({BPE_ENCODE_SQL}),
-meta AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     w -> w <> '') AS ws
-  FROM documents WHERE lang IS NOT NULL
-),
-per_doc AS (
-  SELECT m.doc_id, m.lang,
-         CAST(coalesce(len(m.ws), 0) AS BIGINT) AS n_words,
-         CAST(coalesce(list_sum(list_transform(m.ws, w -> length(w))), 0)
-              AS BIGINT) AS n_chars,
-         e.n_tokens
-  FROM meta m JOIN enc_out e USING (doc_id)
-)
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_words) AS BIGINT) AS n_words,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CASE WHEN sum(n_words) = 0 THEN 0.0
-            ELSE CAST(sum(n_tokens) AS DOUBLE) / CAST(sum(n_words) AS DOUBLE)
-       END AS fertility,
-       CASE WHEN sum(n_tokens) = 0 THEN 0.0
-            ELSE CAST(sum(n_chars) AS DOUBLE) / CAST(sum(n_tokens) AS DOUBLE)
-       END AS chars_per_token
-FROM per_doc GROUP BY lang
-"""
-
-
-TOKENIZER_FERTILITY_SQL = _tokenizer_fertility_sql()
-
-
 def __getattr__(name: str):
     """Lazy cross-module SQL (see the CORPUS_DECON_SUITE_SQL note):
     resolved on first access, after both plan modules finish init."""
@@ -3316,8 +1899,8 @@ CHI2_CRITICAL = 97.35
 
 
 def lang_source_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson χ² independence test, language × source (pre-built
-    r13; ``operators/corpus.py:chi_square_independence``): a crawl
+    """Pearson χ² independence test, language × source
+    (``operators/corpus.py:chi_square_independence``): a crawl
     whose languages skew by source needs per-source language budgets,
     not one global mix — this is the one-row statistical answer.  One
     fused hash-agg collapses the corpus to the 5×20 contingency
@@ -3367,96 +1950,3 @@ SELECT cast(sum(cast(term AS DECIMAL(28,9))) AS DOUBLE) AS chi2,
          AS verdict
 FROM t
 """
-
-
-# --- Poisson bootstrap CI (mean tokens per doc) ------------------------------
-
-BOOT_B = 20
-BOOT_Z = 1.96
-
-
-def corpus_mean_tokens_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean tokens-per-document with a deterministic Poisson-bootstrap
-    95% CI (pre-built r13; ``operators/corpus.py:
-    poisson_bootstrap_ci``): the error bar a corpus-level number
-    ships with, computed scalably — hash-derived Poisson(1) replicate
-    weights, one corpus pass, B-row statistics frame."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    v = docs.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("ntok"),
-    )
-    return corpus.poisson_bootstrap_ci(
-        v, "ntok", n_replicates=BOOT_B, z=BOOT_Z
-    )
-
-
-def _boot_sql() -> str:
-    from ..operators.corpus import POISSON1_CDF
-
-    t = POISSON1_CDF
-    b = BOOT_B
-    return f"""
-WITH v AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS x
-  FROM documents
-),
-ex AS (
-  SELECT doc_id, x, unnest(generate_series(0, {b - 1})) AS bb FROM v
-),
-wgt AS (
-  SELECT bb,
-         CAST(CASE WHEN u < {t[0]} THEN 0
-                   WHEN u < {t[1]} THEN 1
-                   WHEN u < {t[2]} THEN 2
-                   WHEN u < {t[3]} THEN 3
-                   WHEN u < {t[4]} THEN 4
-                   ELSE 5 END AS BIGINT) AS w, x
-  FROM (
-    SELECT bb, x,
-           CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || bb::VARCHAR),
-                                1, 8))::BIGINT AS DOUBLE)
-             / 4294967296.0 AS u
-    FROM ex
-  )
-),
-reps AS (
-  SELECT {sql_exact_round(
-      "CAST(sum(w * x) AS DOUBLE) / CAST(sum(w) AS DOUBLE)", 9)} AS m
-  FROM wgt GROUP BY bb
-),
-mm AS (
-  SELECT m,
-         {sql_exact_round(
-             "cast(sum(cast(m AS DECIMAL(28,9))) OVER () AS DOUBLE)"
-             f" / {float(b)}", 9)} AS boot_mean
-  FROM reps
-),
-dev AS (
-  SELECT boot_mean,
-         {sql_exact_round("(m - boot_mean) * (m - boot_mean)", 9)} AS d2
-  FROM mm
-),
-sd AS (
-  SELECT boot_mean,
-         {sql_exact_round(
-             "sqrt(cast(sum(cast(d2 AS DECIMAL(28,9))) OVER () AS DOUBLE)"
-             f" / {float(b - 1)})", 9)} AS boot_std
-  FROM dev LIMIT 1
-),
-est AS (
-  SELECT {sql_exact_round(
-      "CAST(sum(x) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 9)}
-    AS estimate
-  FROM v
-)
-SELECT estimate, boot_mean, boot_std,
-       {sql_exact_round(f"boot_mean - {BOOT_Z} * boot_std", 9)} AS ci_lo,
-       {sql_exact_round(f"boot_mean + {BOOT_Z} * boot_std", 9)} AS ci_hi,
-       CAST({b} AS BIGINT) AS n_replicates
-FROM est, sd
-"""
-
-
-CORPUS_MEAN_TOKENS_CI_SQL = _boot_sql()

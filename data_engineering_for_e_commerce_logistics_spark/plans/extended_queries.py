@@ -126,12 +126,6 @@ verified AS (
 """
 
 
-DEDUP_MINHASH_SQL = f"""
-WITH {minhash_pipeline_ctes()}
-SELECT id_a, id_b, jaccard FROM verified
-"""
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     return dedup.ngram_jaccard_pairs(
@@ -149,15 +143,6 @@ FROM shl a JOIN shl b ON a.doc_id < b.doc_id
 WHERE len(list_intersect(a.ws, b.ws))::DOUBLE /
       (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))) >= {THRESHOLD}
 """
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash signatures — fully oracle-checked since r03: the 64-bit
-    assembly IS portable SQL (md5 hex nibble → strpos, per-bit vote
-    sums, shift/CASE assembly with the sign bit mapped to -2^63), so
-    DuckDB reproduces every signature bit-exactly."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return dedup.simhash(docs)
 
 
 def _simhash_oracle_sql(bits: int = 64, shingle_k: int = 2) -> str:
@@ -209,32 +194,10 @@ FROM v
 DEDUP_SIMHASH_SQL = _simhash_oracle_sql()
 
 
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via hamming-band buckets.  Oracle = the
-    all-pairs xor/bit_count scan over the (oracle-identical)
-    signatures: the pigeonhole banding is LOSSLESS for
-    max_hamming < n_bands, so the banded engine result and the oracle's
-    quadratic scan are the same set by construction, not approximately.
-    (≥95% recall vs n-gram-jaccard ground truth asserted in pytest.)"""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return dedup.simhash_near_pairs(dedup.simhash(docs), max_hamming=3)
-
-
-DEDUP_SIMHASH_PAIRS_SQL = f"""
-WITH sig AS ({DEDUP_SIMHASH_SQL})
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
 def dedup_simhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation (r08, the r09-earmarked trade
-    pulled forward to fund the capstone's driver row): the signature
-    table (``dedup_simhash``) and the hamming-banded near-dup pairs
-    (``dedup_simhash_pairs``) union under one padded shape — one
-    hamming family, one spec, every original output cell preserved.
+    """The SimHash signature table (``dedup.simhash``) and the
+    hamming-banded near-dup pairs (``dedup.simhash_near_pairs``) under
+    one padded shape — one hamming family, one spec.
     The 64-bit signature rides as a DECIMAL STRING pad column so the
     comparison stays bit-exact (a double pad would round past the
     53-bit mantissa); every other numeric pad follows the suite
@@ -856,19 +819,14 @@ INCREMENTAL_MINHASH_SQL = _incremental_minhash_sql()
 
 
 def incremental_dedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r12 (pre-built
-    unit-first in r08; rebuilt r11 on pre-banded indexes): the three
-    SIGNATURE-family incremental-ingest specs —
-    ``incremental_exact_fresh`` (digest index + bloom-pruned anti
-    join), ``incremental_simhash_fresh`` (pigeonhole-banded hamming
-    screen), ``incremental_minhash_fresh`` (persisted-banding LSH
-    screen + agreeing-fraction verify) — under one padded shape,
-    every original output cell preserved.  The three flows ran three
-    separate ``documents`` scans and batch splits as separate specs;
-    the suite caches the table once and derives all three index/delta
-    chains from the shared frame (the semantic family keeps its own
-    spec: it reads ``embeddings``, not ``documents``).  BOTH near-dup
-    screens read PRE-BANDED persisted indexes (``bands_of`` /
+    """The three SIGNATURE-family incremental-ingest flows under one
+    padded shape: exact (digest index + bloom-pruned anti join),
+    simhash (pigeonhole-banded hamming screen) and minhash
+    (persisted-banding LSH screen + agreeing-fraction verify).  The
+    suite caches the ``documents`` table once and derives all three
+    index/delta chains from the shared frame (the semantic family
+    keeps its own spec: it reads ``embeddings``, not ``documents``).
+    BOTH near-dup screens read PRE-BANDED persisted indexes (``bands_of`` /
     ``simhash_bands_of``), the layout a production ingest loop
     persists so the index side is never re-banded per batch.
 
@@ -979,7 +937,7 @@ FROM ({INCREMENTAL_MINHASH_SQL})
 """
 
 
-# --- Cross-source contamination matrix (r13 pre-build) -----------------------
+# --- Cross-source contamination matrix --------------------------------------
 #
 # Dataset forensics over the SAME verified near-dup pair mine the LSH
 # dedup family already runs: label each pair with its two documents'

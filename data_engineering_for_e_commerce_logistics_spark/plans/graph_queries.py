@@ -71,18 +71,14 @@ SELECT node AS doc_id, min(root) AS cluster_id FROM reach GROUP BY node
 
 
 def minhash_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r13 (the docstring
-    trade in plans/queries.py — pre-built unit-first in r08): the
-    MinHash near-dup family's pair evidence and its connected-
-    components clustering, one spec.  ``dedup_clusters`` re-ran the
-    whole LSH miner (shingle → signature → bands → bucket join →
-    Jaccard verify, ~2s at sf0.1) that ``dedup_minhash_lsh`` already
-    runs; the suite mines ONCE, caches the verified pairs, and
-    serves the 'pairs' variant verbatim plus the 'clusters' variant
-    from the same cached frame (``connected_components`` caches its
-    own edge projection on top, so the fixpoint never replays the
-    miner either).  Numeric pads cast double; bench baseline at
-    registration = the parts' sum via bench.py RENAMED_FROM."""
+    """The MinHash near-dup family's pair evidence and its connected-
+    components clustering, one spec.  The suite runs the LSH miner
+    (shingle → signature → bands → bucket join → Jaccard verify, ~2s
+    at sf0.1) ONCE, caches the verified pairs, and serves the 'pairs'
+    variant verbatim plus the 'clusters' variant from the same cached
+    frame (``connected_components`` caches its own edge projection on
+    top, so the fixpoint never replays the miner either).  Numeric
+    pads cast double."""
     from ..operators.graph import connected_components
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
@@ -139,10 +135,9 @@ FROM reach GROUP BY node
 """
 
 def corpus_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe train/val/test split (r07 unit-first debut, r08
-    registry candidate): near-duplicate documents MUST land in the
-    same split, or eval examples leak into training as near-copies —
-    the standard contamination trap a per-document hash split
+    """Leakage-safe train/val/test split: near-duplicate documents
+    MUST land in the same split, or eval examples leak into training
+    as near-copies — the standard contamination trap a per-document hash split
     (``corpus_split_sample``) cannot avoid.  The fix: key the split
     hash on the near-dup COMPONENT representative (min doc_id over
     the connected component of the LSH pair graph), so an entire
@@ -225,16 +220,12 @@ SELECT doc_id, rep_id, split FROM split_keyed
 
 
 def corpus_split_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r08 (pre-built and
-    differential-proven in r07 so registration is a pure rotation
-    move): the plain hash split + stratified sample
+    """The plain hash split + stratified sample
     (``corpus_split_sample``) and the leakage-safe rep-keyed split
     (``corpus_split_no_leakage``) union under one padded shape —
-    one splitting family, one spec, every original output cell
-    preserved.  Numeric pad columns cast to double on both engines
-    (the text-suite convention: pandas upcasts nullable ints anyway,
-    so pin it).  Bench baseline at registration = the parts' sum via
-    bench.py RENAMED_FROM."""
+    one splitting family, one spec.  Numeric pad columns cast to
+    double on both engines (the text-suite convention: pandas upcasts
+    nullable ints anyway, so pin it)."""
     from . import corpus_queries as xc
 
     nd = F.lit(None).cast("double")
@@ -300,8 +291,9 @@ def ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_assign_from(emb: DataFrame) -> DataFrame:
-    """ivf_assign's chain from an already-loaded embeddings frame, so
-    ann_assign_suite can share one cached scan across both legs.
+    """Coarse quantization: every vector assigned to its nearest seed
+    centroid (L2; seeds = first N vectors), from an already-loaded
+    embeddings frame so ann_assign_suite shares one cached scan.
     Packed-quantizer argmin (r11, ``similarity._pack_rows``): the
     bounded centroid set rides as one broadcast array row and the
     nearest-cell pick is a per-row expression — map-only, no sort
@@ -577,54 +569,6 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KMEANS_REFINE_SQL = f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-seeds AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {N_CENTROIDS}),
-s0 AS (
-  SELECT e.vec_id, e.v, c.centroid_id,
-         list_reduce(list_transform(list_zip(e.v, c.cv),
-                     p -> (p[1] - p[2]) * (p[1] - p[2])), (a, b) -> a + b) AS dist
-  FROM e, seeds c
-),
-assign0 AS (
-  SELECT vec_id, v, centroid_id AS cell_round1 FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY dist ASC, centroid_id ASC) AS rn
-    FROM s0
-  ) WHERE rn = 1
-),
-dims AS (
-  SELECT cell_round1, unnest(v) AS val,
-         generate_subscripts(v, 1) - 1 AS dim
-  FROM assign0
-),
-refined AS (
-  SELECT centroid_id, list(cval ORDER BY dim) AS cv FROM (
-    SELECT cell_round1 AS centroid_id, dim,
-           cast(sum(cast(val as decimal(28,8))) as double) / count(*) AS cval
-    FROM dims GROUP BY 1, 2
-  ) GROUP BY centroid_id
-),
-s1 AS (
-  SELECT a.vec_id, c.centroid_id,
-         list_reduce(list_transform(list_zip(a.v, c.cv),
-                     p -> (p[1] - p[2]) * (p[1] - p[2])), (a2, b2) -> a2 + b2) AS dist
-  FROM assign0 a, refined c
-),
-assign1 AS (
-  SELECT vec_id, centroid_id AS cell_round2 FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY dist ASC, centroid_id ASC) AS rn
-    FROM s1
-  ) WHERE rn = 1
-)
-SELECT a0.vec_id, a0.cell_round1, a1.cell_round2
-FROM assign0 a0 JOIN assign1 a1 ON a0.vec_id = a1.vec_id
-"""
-
 # --- Multi-iteration k-means (the full iterative algorithm, oracle-checked) -
 
 KMEANS_N_ITER = 3
@@ -742,20 +686,12 @@ def _kmeans_iterations_sql(n_iter: int = KMEANS_N_ITER) -> str:
     )
 
 
-KMEANS_ITERATIONS_SQL = _kmeans_iterations_sql()
-
-
 def kmeans_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r09 (the docstring
-    trade in plans/queries.py — pre-built unit-first in r08): the one
-    Lloyd family, one spec.  ``kmeans_refine``'s (cell_round1,
-    cell_round2) ARE the 3-round chain's round-0 and round-1
-    assignments, and ``kmeans_iterations``'s final cell is round 2 —
-    so the suite runs the shared chain ONCE (3 assigns instead of the
-    parts' 2+3) and serves both retiring specs' cells from it, every
-    original output cell preserved.  Numeric pads cast double on both
-    engines (the split-suite convention); bench baseline at
-    registration = the parts' sum via bench.py RENAMED_FROM.
+    """The Lloyd family, one spec: the 'refine' variant's
+    (cell_round1, cell_round2) are the 3-round chain's round-0 and
+    round-1 assignments and the 'iter3' variant's cell is round 2, so
+    the suite runs the shared chain ONCE (3 assigns).  Numeric pads
+    cast double on both engines (the split-suite convention).
     Assignments are packed-quantizer argmins (r11,
     ``similarity._pack_rows`` — map-only, same tie-break and fold
     doubles as the former row_number windows)."""
@@ -1223,7 +1159,7 @@ SEMDEDUP_TOPK = 3
 def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup candidates, SemDeDup-shape (Abbas et al. 2023,
     arXiv:2303.09540): embeddings are coarse-quantized to cells
-    (broadcast seed centroids, the ivf_assign plan), and near-dup
+    (broadcast seed centroids, the ``_ivf_assign_from`` plan), and near-dup
     pairs are mined ONLY within each cell — per-cell top-k most
     similar pairs by exact cosine.
 
@@ -1359,7 +1295,7 @@ def semdedup_trained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SemDeDup PRODUCTION path end-to-end (VERDICT r03 item 3):
     ``semdedup_pairs`` seeds cells with ``vec_id < N_CENTROIDS``;
     here the cells come from TRAINED centroids — one decimal-exact
-    Lloyd refinement (the ``kmeans_refine`` plan) — then the same
+    Lloyd refinement (the ``kmeans_suite`` refine leg's plan) — then the same
     cell-keyed pair mining.  This oracle-proves the composition that
     a real 100 TB embedding-dedup pipeline runs: train coarse
     centroids, assign, mine near-dups only within cells.
@@ -1535,7 +1471,7 @@ SEMDEDUP_TRAINED_PAIRS_SQL = _semdedup_trained_sql(
 )
 
 
-# --- SemDeDup with coarse-routed assignment (r06 registry candidate) --------
+# --- SemDeDup with coarse-routed assignment ---------------------------------
 
 
 def semdedup_routed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1678,8 +1614,7 @@ SEMDEDUP_ROUTED_PAIRS_SQL = _semdedup_routed_sql()
 def semdedup_routing_suite(
     spark: SparkSession, sf_dir: str, n_seed: int | None = None
 ) -> DataFrame:
-    """Merged-variants consolidation earmarked for r14 (pre-built
-    unit-first in r12): the two ASSIGNMENT-path SemDeDup pair miners —
+    """Merged-variants consolidation: the two ASSIGNMENT-path SemDeDup pair miners —
     ``semdedup_trained_pairs`` (seed assign → decimal-exact Lloyd
     refine → flat packed re-assign) and ``semdedup_routed_pairs``
     (two-level coarse routing, n_probe=2) — under one tagged union.
@@ -1889,16 +1824,11 @@ ORDER BY vec_id
 
 
 def semdedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r12 (the docstring
-    trade in plans/queries.py — pre-built unit-first in r08): the
-    SemDeDup mine + prune family, one spec.  ``semdedup_keep``
-    recomputed ``semdedup_pairs``' whole cell-bounded miner just to
-    anti-join its drop set; the suite mines the pairs ONCE (cached)
-    and serves both retiring specs' rows from that one pass — the
-    'pairs' variant is the pair evidence verbatim, the 'keep' variant
-    is the pruned corpus derived from the same cached frame.  Numeric
-    pads cast double on both engines; bench baseline at registration
-    = the parts' sum via bench.py RENAMED_FROM."""
+    """The SemDeDup mine + prune family, one spec: the suite mines the
+    pairs ONCE (cached) — the 'pairs' variant is the pair evidence
+    verbatim, the 'keep' variant is the corpus minus the higher id of
+    every pair at or above tau, derived from the same cached frame.
+    Numeric pads cast double on both engines."""
     from ..operators.similarity import semdedup_prune
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
@@ -1973,8 +1903,9 @@ def routed_assign_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _routed_assign_from(emb: DataFrame) -> DataFrame:
-    """routed_assign_embeddings' chain from an already-loaded frame
-    (shared-scan hook for ann_assign_suite)."""
+    """Two-level (coarse-routed) centroid assignment with ONE trained
+    super round and decimal-exact super means, from an already-loaded
+    frame (shared-scan hook for ann_assign_suite)."""
     from ..operators.similarity import two_level_assign
 
     centroids = emb.filter(F.col("vec_id") < ROUTED_K).select(
@@ -2051,20 +1982,16 @@ ORDER BY vec_id
 ROUTED_ASSIGN_SQL = _routed_assign_sql()
 
 
-# --- ANN coarse-assignment suite (the r11 consolidation) --------------------
+# --- ANN coarse-assignment suite ---------------------------------------------
 
 
 def ann_assign_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r11 (the docstring
-    trade in plans/queries.py — pre-built unit-first in r08): the two
-    coarse-assignment specs, one spec.  The 'ivf' variant carries
-    ``ivf_assign``'s cells + distances verbatim; the 'routed' variant
-    carries ``routed_assign_embeddings``'s two-level cells verbatim.
-    Shared work = the embeddings scan (cached once, both legs read
-    it); the assignment chains stay the parts' exact plans so every
-    original output cell survives the merge.  Numeric pads cast
-    double on both engines; bench baseline at registration = the
-    parts' sum via bench.py RENAMED_FROM."""
+    """The two coarse-assignment paths, one spec.  The 'ivf' variant
+    carries the flat nearest-seed cells + distances
+    (``_ivf_assign_from``); the 'routed' variant carries the two-level
+    cells (``_routed_assign_from``).  Shared work = the embeddings scan
+    (cached once, both legs read it).  Numeric pads cast double on
+    both engines."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"].cache()
     nd = F.lit(None).cast("double")
     ivf = _ivf_assign_from(emb).select(
@@ -2603,9 +2530,8 @@ INC_SEM_TAU = 0.4  # same firing threshold as SEMDEDUP_TAU
 
 
 def incremental_semdedup_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic sibling of ``incremental_{exact,minhash,simhash}_fresh``
-    (r04's unit-first debut pattern; registration earmarked for the r07
-    window — the r06 window is full, see plans/queries.py): batch 1
+    """Semantic sibling of the incremental dedup suite's signature
+    flows: batch 1
     builds the cell index under the shared 16-centroid codebook
     (its own within-batch SemDeDup screen applied), batch 2 — whose
     vec_id%10 ∈ [3,5) slice re-ingests 20% of batch 1's vectors
@@ -2720,8 +2646,7 @@ INC_PQ_THETA = 1.0  # squared-L2 dup radius (below min nonzero pair @ sf0.01)
 
 
 def incremental_pq_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-index sibling of ``incremental_semdedup_fresh``
-    (r13 registry candidate, pre-built unit-first in r08): the
+    """Compressed-index sibling of ``incremental_semdedup_fresh``: the
     persisted index holds PQ CODES (n_sub small ints + residuals per
     vector, ~16x smaller than the full vectors the semantic index
     keeps); the cross-batch screen is the triangle-inequality-sound
@@ -2903,105 +2828,7 @@ ORDER BY vec_id
 INCREMENTAL_PQ_SQL = _incremental_pq_sql()
 
 
-def incremental_embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r14 (pre-built
-    unit-first in r12; the documents-side twin registered r12 as
-    ``incremental_dedup_suite``): the two EMBEDDING-side incremental
-    ingest flows — ``incremental_semdedup_fresh`` (full-vector cell
-    index, cosine screen) and ``incremental_pq_fresh`` (PQ-code
-    index, triangle-inequality ADC screen + exact verify) — under one
-    tagged union.  Both specs independently scanned ``embeddings``
-    and re-derived the SAME coarse centroids and the SAME
-    vec_id%10 batch split; the suite caches the raw (vec_id,
-    embedding) frame once and derives centroids, batch 1, and
-    batch 2 from the shared cache, then runs each family's unchanged
-    operator chain (the flows stay distinct by design: one persists
-    full vectors, the other 16× smaller codes — that trade-off is the
-    point of having both).  Output schema is identical across
-    variants — (variant, vec_id, cell, ingest_batch) — so no padding
-    is needed, and each leg's cells are bit-identical to its
-    standalone spec (pinned by the parts-equality unit).
-
-    Cache lifetime contract as the incremental-dedup family: one-shot
-    callers ignore it, loops ``clearCache()`` per batch.  The
-    localCheckpoint pins (batch-1 index, offline codebook) carry over
-    unchanged from the standalone specs."""
-    from ..operators.similarity import (
-        incremental_pq_dedup,
-        incremental_semdedup,
-        pq_train_encode,
-    )
-    from .extended_queries import INC_B1_LT, INC_B2_GE, INC_OFFSET
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    centroids = emb.filter(F.col("vec_id") < ROUTED_K).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
-    )
-    b1 = emb.where(F.col("vec_id") % 10 < INC_B1_LT)
-    b2 = emb.where(F.col("vec_id") % 10 >= INC_B2_GE).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(INC_OFFSET)
-    )
-
-    # --- semantic leg (full-vector index)
-    _, sem1 = incremental_semdedup(b1, None, centroids, tau=INC_SEM_TAU)
-    sem1 = sem1.localCheckpoint()
-    _, sem2 = incremental_semdedup(b2, sem1, centroids, tau=INC_SEM_TAU)
-    sem = sem1.select(
-        "vec_id", "cell", F.lit(1).alias("ingest_batch")
-    ).unionByName(
-        sem2.select("vec_id", "cell", F.lit(2).alias("ingest_batch"))
-    )
-
-    # --- PQ leg (compressed-code index)
-    _, codebook = pq_train_encode(
-        emb, dim=EMB_DIM, n_sub=PQ_SUB, k=PQ_K, n_refine=1
-    )
-    codebook = codebook.localCheckpoint()
-    _, pq1 = incremental_pq_dedup(
-        b1, None, centroids, codebook, INC_PQ_THETA, dim=EMB_DIM, n_sub=PQ_SUB
-    )
-    pq1 = pq1.localCheckpoint()
-    _, pq2 = incremental_pq_dedup(
-        b2,
-        pq1,
-        centroids,
-        codebook,
-        INC_PQ_THETA,
-        dim=EMB_DIM,
-        n_sub=PQ_SUB,
-        corpus_lookup=b1,
-    )
-    pq = (
-        pq1.select("vec_id", "cell")
-        .distinct()
-        .withColumn("ingest_batch", F.lit(1))
-        .unionByName(
-            pq2.select("vec_id", "cell")
-            .distinct()
-            .withColumn("ingest_batch", F.lit(2))
-        )
-    )
-
-    return (
-        sem.select(F.lit("semantic").alias("variant"), "*")
-        .unionByName(pq.select(F.lit("pq").alias("variant"), "*"))
-        .orderBy("variant", "vec_id")
-    )
-
-
-INCREMENTAL_EMBEDDING_SUITE_SQL = f"""
-SELECT 'semantic' AS variant, vec_id, cell, ingest_batch
-FROM ({INCREMENTAL_SEMDEDUP_SQL})
-UNION ALL
-SELECT 'pq', vec_id, cell, ingest_batch
-FROM ({INCREMENTAL_PQ_SQL})
-ORDER BY variant, vec_id
-"""
-
-
-# --- Semantic decontamination (third decon family member; r15 debut) --------
+# --- Semantic decontamination (the decon suite's semantic leg) -------------
 
 SEM_DECON_TAU = 0.4       # = SEMDEDUP_TAU: the fixture's near-dup radius
 SEM_DECON_BENCH_MOD = 7   # same stand-in benchmark rule as the fuzzy decon
@@ -3255,95 +3082,7 @@ SELECT * FROM comp UNION ALL SELECT * FROM dist
 JL_PROJECT_SQL = _jl_sql()
 
 
-# --- Alternating-star CC over user activity chains (THE r18 debut,
-# --- pre-built r09) ---------------------------------------------------------
-
-CHAIN_GAP_SEC = 86400  # 1 day: consecutive-event chains run 50+ deep
-# at sf0.01 (vs max 3 under the 30-min session gap) — deep components
-# are exactly the regime the O(log n) contraction exists for
-
-
-def events_chain_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Activity-episode labeling via alternating-star connected
-    components (``operators/graph.py:cc_alternating``): consecutive
-    events of a user link when separated by under CHAIN_GAP_SEC, and
-    each event is labeled with its chain's minimum event_id.  The
-    same gaps-and-islands semantics as ``events_sessionize`` at a
-    1-day gap — but computed through the GRAPH path, because this
-    spec's job is to driver-prove the O(log n) CC twin on a real
-    deep-chain graph (the window form stops working the moment
-    linkage isn't a total order per key: near-dup graphs, entity
-    resolution, cross-user identity edges — CC is the general tool,
-    and it must be driver-checked on data where components are DEEP,
-    not the 2-3-node LSH clusters ``minhash_cluster_suite`` labels).
-
-    100 TB shape: the edge build is one user-keyed window pass
-    (lag + epoch diff); the contraction runs O(log chain-length)
-    rounds of edge-keyed exchanges over a frame bounded by #events —
-    no diameter dependence, unlike the label-propagation fixpoint
-    that would loop once per chain HOP (a 10k-event streak = 10k
-    driver-coordinated rounds).  Output: (event_id, episode_id) for
-    every event, isolated events labeling themselves.
-    """
-    from pyspark.sql import Window
-
-    from ..operators.graph import cc_alternating
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    linked = (
-        ev.select("user_id", "event_id", "ts")
-        .withColumn("prev_id", F.lag("event_id").over(w))
-        .withColumn("prev_ts", F.lag("ts").over(w))
-    )
-    edges = linked.where(
-        F.col("prev_id").isNotNull()
-        & (
-            F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")
-            < F.lit(CHAIN_GAP_SEC)
-        )
-    ).select(F.col("event_id").alias("id_a"), F.col("prev_id").alias("id_b"))
-    labels = cc_alternating(edges)
-    return (
-        ev.select("event_id")
-        .join(labels.withColumnRenamed("node", "event_id"), "event_id", "left")
-        .select(
-            "event_id",
-            F.coalesce(F.col("label"), F.col("event_id"))
-            .cast("long")
-            .alias("episode_id"),
-        )
-    )
-
-
-EVENTS_CHAIN_COMPONENTS_SQL = f"""
-WITH RECURSIVE
-linked AS (
-  SELECT event_id,
-         lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_id,
-         extract(epoch FROM ts) - extract(epoch FROM lag(ts) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id)) AS gap
-  FROM events
-),
-pe AS (
-  SELECT event_id AS a, prev_id AS b FROM linked
-  WHERE prev_id IS NOT NULL AND gap < {CHAIN_GAP_SEC}
-),
-edges AS (SELECT a AS src, b AS dst FROM pe UNION SELECT b, a FROM pe),
-reach(node, root) AS (
-  SELECT event_id, event_id FROM events
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS event_id, min(root)::BIGINT AS episode_id
-FROM reach GROUP BY node
-"""
-
-
-# --- Farthest-point (k-center) seeding (THE r19 debut, pre-built r09) -------
+# --- Farthest-point (k-center) seeding --------------------------------------
 
 KCENTER_K = 8
 
@@ -3419,7 +3158,7 @@ UNION ALL
 KCENTER_SEED_SQL = _kcenter_sql()
 
 
-# --- Embedding-space drift (PSI over IVF cell occupancy; r13 pre-build) ------
+# --- Embedding-space drift (PSI over IVF cell occupancy) --------------------
 #
 # The vector-pipeline twin of ``hist_drift_events``: numeric-column
 # drift has the mergeable histogram, embedding drift has CELL
@@ -3562,55 +3301,11 @@ UNION ALL
 EMBEDDING_DRIFT_SQL = _embedding_drift_sql()
 
 
-# --- Drift-monitor suite (future trade vehicle; r13 pre-build) ---------------
-#
-# Pairs BOTH drift monitors — numeric-column PSI over mergeable
-# histograms (``hist_drift_events``) and embedding-space PSI over IVF
-# cell occupancy (``embedding_drift_cells``) — under one padded
-# union, so a future trade can hold the whole "is tonight's ingest
-# distributionally sane" check in ONE registry slot.  No shared scan
-# (different tables), so the registration case is slot economy plus
-# the operational pairing; parts-equivalence is pinned by the suite
-# test, each part by its own oracle.
-
-
-def drift_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import analytics_queries as aq  # lazy: avoid module cycle
-
-    hist = aq.hist_drift_events(spark, sf_dir).select(
-        F.lit("hist").alias("monitor"), "variant", "event_type", "psi",
-        "drifted",
-    )
-    emb = embedding_drift_cells(spark, sf_dir).select(
-        F.lit("embedding").alias("monitor"),
-        "variant",
-        F.lit(None).cast("string").alias("event_type"),
-        "psi",
-        "drifted",
-    )
-    return hist.unionByName(emb)
-
-
-def _drift_monitor_suite_sql() -> str:
-    """Lazy cross-module SQL (the CORPUS_DECON_SUITE_SQL note): built
-    on first access so the analytics module import stays lazy."""
-    from . import analytics_queries as aq
-
-    return f"""
-WITH hist_leg AS ({aq.HIST_DRIFT_SQL}),
-emb_leg AS ({EMBEDDING_DRIFT_SQL})
-SELECT 'hist' AS monitor, variant, event_type, psi, drifted FROM hist_leg
-UNION ALL
-SELECT 'embedding', variant, CAST(NULL AS VARCHAR), psi, drifted
-FROM emb_leg
-"""
-
-
 SWEEP_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
 
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup verify-threshold sensitivity sweep (pre-built r13):
+    """Near-dup verify-threshold sensitivity sweep:
     mine the LSH candidates ONCE at the loosest threshold, then read
     pair count / affected docs / removed docs / dup rate at every
     sweep point — the tuning curve that answers "what does moving the
@@ -3702,228 +3397,8 @@ LEFT JOIN aff ON th.t = aff.t
 """
 
 
-def lsh_forensics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE future one-mine LSH consolidation vehicle (pre-built r13):
-    verified pairs, connected-component cluster labels, the
-    per-source retention ledger, and the threshold sensitivity sweep
-    — four forensic readouts off ONE cached banded mine at the
-    loosest sweep threshold (the registered-cut legs filter it to
-    ≥ {THRESHOLD}, an identical set to mining at {THRESHOLD}
-    directly since verify stores exact Jaccards).  Registering this
-    retires minhash_cluster_suite + dedup_retention_ledger +
-    dedup_threshold_sweep into one slot; every leg's cells are
-    bit-identical to its standalone spec (parts-equivalence pinned).
-
-    Pads: pairs → (k1=id_a, k2=id_b, v1=jaccard); clusters →
-    (k1=doc_id, k2=cluster_id); ledger → (s=source, n1..n8 counts,
-    v1/v2 retention rates); sweep → (v1=threshold, n1..n3 counts,
-    v2=dup_rate)."""
-    from ..operators.graph import connected_components
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    base = docs.select("doc_id", "text", "source").cache()
-    mine = dedup.minhash_lsh_dedup(
-        base,
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_k=SHINGLE_K,
-        threshold=SWEEP_THRESHOLDS[0],
-    ).cache()
-    pairs06 = mine.where(F.col("jaccard") >= THRESHOLD).cache()
-    clusters = connected_components(pairs06)
-    ledger = dedup.retention_ledger(base, pairs06)
-    th = base.agg(F.count(F.lit(1)).alias("__nd")).select(
-        "__nd",
-        F.explode(
-            F.array(*[F.lit(t) for t in SWEEP_THRESHOLDS])
-        ).alias("t"),
-    )
-    pt = mine.crossJoin(F.broadcast(th.select("t"))).where(
-        F.col("jaccard") >= F.col("t")
-    )
-    sweep_agg = pt.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.countDistinct("id_b").alias("n_removed"),
-    )
-    sweep_aff = (
-        pt.select("t", F.explode(F.array("id_a", "id_b")).alias("__id"))
-        .groupBy("t")
-        .agg(F.countDistinct("__id").alias("n_docs_affected"))
-    )
-    sweep = (
-        th.join(F.broadcast(sweep_agg), "t", "left")
-        .join(F.broadcast(sweep_aff), "t", "left")
-        .na.fill({"n_pairs": 0, "n_removed": 0, "n_docs_affected": 0})
-        .select(
-            F.col("t"),
-            "n_pairs",
-            "n_docs_affected",
-            "n_removed",
-            exact_round(
-                F.col("n_removed").cast("double")
-                / F.col("__nd").cast("double"),
-                9,
-            ).alias("dup_rate"),
-        )
-    )
-    nl = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    nd_ = F.lit(None).cast("double")
-
-    def _pad(df, **cols):
-        out = []
-        for name in (
-            "k1", "k2", "s",
-            "n1", "n2", "n3", "n4", "n5", "n6", "n7", "n8",
-            "v1", "v2",
-        ):
-            if name in cols:
-                out.append(cols[name].alias(name))
-            elif name == "s":
-                out.append(ns.alias(name))
-            elif name.startswith("n") or name.startswith("k"):
-                out.append(nl.alias(name))
-            else:
-                out.append(nd_.alias(name))
-        return df.select(cols["variant"].alias("variant"), *out)
-
-    p_leg = _pad(
-        pairs06,
-        variant=F.lit("pairs"),
-        k1=F.col("id_a"),
-        k2=F.col("id_b"),
-        v1=F.col("jaccard"),
-    )
-    c_leg = _pad(
-        clusters,
-        variant=F.lit("clusters"),
-        k1=F.col("node"),
-        k2=F.col("label"),
-    )
-    l_leg = _pad(
-        ledger,
-        variant=F.lit("ledger"),
-        s=F.col("source"),
-        n1=F.col("n_docs"),
-        n2=F.col("n_tokens"),
-        n3=F.col("exact_kept"),
-        n4=F.col("exact_tokens"),
-        n5=F.col("near_kept"),
-        n6=F.col("near_tokens"),
-        n7=F.col("final_kept"),
-        n8=F.col("final_tokens"),
-        v1=F.col("doc_retention"),
-        v2=F.col("token_retention"),
-    )
-    s_leg = _pad(
-        sweep,
-        variant=F.lit("sweep"),
-        n1=F.col("n_pairs"),
-        n2=F.col("n_docs_affected"),
-        n3=F.col("n_removed"),
-        v1=F.col("t"),
-        v2=F.col("dup_rate"),
-    )
-    return p_leg.unionByName(c_leg).unionByName(l_leg).unionByName(s_leg)
-
-
-LSH_FORENSICS_SQL = f"""
-WITH RECURSIVE
-{minhash_pipeline_ctes(SWEEP_THRESHOLDS[0])},
-v06 AS (SELECT * FROM verified WHERE jaccard >= {THRESHOLD}),
-nodes AS (
-  SELECT DISTINCT id FROM (
-    SELECT id_a AS id FROM v06 UNION SELECT id_b FROM v06)
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM v06
-  UNION SELECT id_b, id_a FROM v06
-),
-reach(node, root) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, min(root) AS rep FROM reach GROUP BY node),
-lbase AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
-         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
-  FROM documents
-),
-fpk AS (SELECT fp, min(doc_id) AS kept FROM lbase GROUP BY fp),
-flags AS (
-  SELECT b.source, b.ntok,
-         CASE WHEN b.doc_id = k.kept THEN 1 ELSE 0 END AS ex,
-         CASE WHEN c.rep IS NULL OR c.rep = b.doc_id THEN 1 ELSE 0 END AS nr
-  FROM lbase b JOIN fpk k USING (fp) LEFT JOIN comp c USING (doc_id)
-),
-ledger AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(ntok) AS BIGINT) AS n_tokens,
-         CAST(sum(ex) AS BIGINT) AS exact_kept,
-         CAST(sum(ex * ntok) AS BIGINT) AS exact_tokens,
-         CAST(sum(nr) AS BIGINT) AS near_kept,
-         CAST(sum(nr * ntok) AS BIGINT) AS near_tokens,
-         CAST(sum(ex * nr) AS BIGINT) AS final_kept,
-         CAST(sum(ex * nr * ntok) AS BIGINT) AS final_tokens
-  FROM flags GROUP BY source
-),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-th AS (SELECT unnest({list(SWEEP_THRESHOLDS)}) AS t, n_docs FROM nn),
-pt AS (
-  SELECT th.t, v.id_a, v.id_b FROM verified v JOIN th ON v.jaccard >= th.t
-),
-sagg AS (
-  SELECT t, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(count(DISTINCT id_b) AS BIGINT) AS n_removed
-  FROM pt GROUP BY t
-),
-saff AS (
-  SELECT t, CAST(count(DISTINCT id) AS BIGINT) AS n_docs_affected FROM (
-    SELECT t, id_a AS id FROM pt UNION SELECT t, id_b FROM pt
-  ) GROUP BY t
-)
-SELECT 'pairs' AS variant, id_a AS k1, id_b AS k2,
-       CAST(NULL AS VARCHAR) AS s,
-       CAST(NULL AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2,
-       CAST(NULL AS BIGINT) AS n3, CAST(NULL AS BIGINT) AS n4,
-       CAST(NULL AS BIGINT) AS n5, CAST(NULL AS BIGINT) AS n6,
-       CAST(NULL AS BIGINT) AS n7, CAST(NULL AS BIGINT) AS n8,
-       jaccard AS v1, CAST(NULL AS DOUBLE) AS v2
-FROM v06
-UNION ALL
-SELECT 'clusters', node, min(root), NULL,
-       NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-       NULL, NULL
-FROM reach GROUP BY node
-UNION ALL
-SELECT 'ledger', NULL, NULL, source,
-       n_docs, n_tokens, exact_kept, exact_tokens,
-       near_kept, near_tokens, final_kept, final_tokens,
-       {sql_exact_round(
-           "CAST(final_kept AS DOUBLE) / CAST(n_docs AS DOUBLE)", 9)},
-       {sql_exact_round(
-           "CAST(final_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 9)}
-FROM ledger
-UNION ALL
-SELECT 'sweep', NULL, NULL, NULL,
-       coalesce(sagg.n_pairs, 0), coalesce(saff.n_docs_affected, 0),
-       coalesce(sagg.n_removed, 0), NULL, NULL, NULL, NULL, NULL,
-       th.t,
-       {sql_exact_round(
-           "CAST(coalesce(sagg.n_removed, 0) AS DOUBLE)"
-           " / CAST(th.n_docs AS DOUBLE)", 9)}
-FROM th
-LEFT JOIN sagg ON th.t = sagg.t
-LEFT JOIN saff ON th.t = saff.t
-"""
-
-
 def dedup_retention_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dedup retention ledger (pre-built r13;
-    ``operators/dedup.py:retention_ledger`` over the registered LSH
+    """Per-source dedup retention ledger (``operators/dedup.py:retention_ledger`` over the registered LSH
     miner's pair evidence): exact-fingerprint and near-dup-cluster
     keep rules as per-doc flags, intersected, rolled up per source
     with exact doc/token counts and 9dp retention rates — the
@@ -3994,204 +3469,3 @@ SELECT *,
          AS token_retention
 FROM agg
 """
-
-
-def ann_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF index balance report (pre-built r13;
-    ``operators/similarity.py:occupancy_balance`` over the registered
-    fixed-quantizer assignment): per-cell occupancy plus the Gini /
-    max-mean-imbalance / empty-cell summary — the ANN-ops number that
-    says whether n_probe cost is predictable BEFORE queries hit a hot
-    cell (the capacity twin of ``embedding_drift_cells``' PSI, same
-    broadcast map-only assign).  Scale: one corpus pass, one
-    ≤n_cells-row summary; windows only on the bounded cell frame."""
-    from ..operators.similarity import (
-        _as_double_vec,
-        _nearest_packed,
-        _pack_rows,
-        occupancy_balance,
-    )
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    vecs = emb.select("vec_id", _as_double_vec("embedding").alias("v"))
-    centroids = vecs.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    packed = F.broadcast(_pack_rows(centroids, "centroid_id", "cv"))
-    occ = (
-        vecs.crossJoin(packed)
-        .select(
-            _nearest_packed(
-                F.col("v"), F.col("__packed"), "centroid_id", "cv"
-            )["id"].alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    full = (
-        centroids.select(F.col("centroid_id").alias("bin"))
-        .join(F.broadcast(occ), "bin", "left")
-        .na.fill({"cnt": 0})
-        .cache()
-    )
-    summary = occupancy_balance(full)
-    nl = F.lit(None).cast("long")
-    nd_ = F.lit(None).cast("double")
-    cells_leg = full.select(
-        F.lit("cells").alias("variant"),
-        F.col("bin").cast("long").alias("k"),
-        F.col("cnt").alias("n"),
-        nl.alias("n2"),
-        nd_.alias("v1"),
-        nd_.alias("v2"),
-    )
-    sum_leg = summary.select(
-        F.lit("summary").alias("variant"),
-        nl.alias("k"),
-        F.col("n_cells").cast("long").alias("n"),
-        F.col("empty_cells").cast("long").alias("n2"),
-        F.col("gini").alias("v1"),
-        F.col("imbalance").alias("v2"),
-    )
-    return cells_leg.unionByName(sum_leg)
-
-
-ANN_BALANCE_SQL = f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-c AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-      WHERE vec_id < {N_CENTROIDS}),
-occ AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS cnt FROM (
-    SELECT s.vec_id, s.centroid_id AS bin FROM (
-      SELECT e.vec_id, c.centroid_id,
-             row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_reduce(list_transform(list_zip(e.v, c.cv),
-                     p -> (p[1] - p[2]) * (p[1] - p[2])),
-                     (a, b) -> a + b) ASC, c.centroid_id ASC) AS rn
-      FROM e, c
-    ) s WHERE s.rn = 1
-  ) GROUP BY bin
-),
-dense AS (
-  SELECT c.centroid_id AS bin, coalesce(o.cnt, CAST(0 AS BIGINT)) AS cnt
-  FROM c LEFT JOIN occ o ON o.bin = c.centroid_id
-),
-rk AS (
-  SELECT bin, cnt,
-         CAST(row_number() OVER (ORDER BY cnt ASC, bin ASC) AS BIGINT) AS i,
-         CAST(count(*) OVER () AS BIGINT) AS n,
-         CAST(sum(cnt) OVER () AS BIGINT) AS tot
-  FROM dense
-)
-SELECT 'cells' AS variant, CAST(bin AS BIGINT) AS k, cnt AS n,
-       CAST(NULL AS BIGINT) AS n2,
-       CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2
-FROM dense
-UNION ALL
-SELECT 'summary', NULL, max(n), sum(CASE WHEN cnt = 0 THEN 1 ELSE 0 END),
-       {sql_exact_round(
-           "CAST(sum((2 * i - n - 1) * cnt) AS DOUBLE)"
-           " / CAST(max(n) * max(tot) AS DOUBLE)", 9)},
-       {sql_exact_round(
-           "CAST(max(cnt) * max(n) AS DOUBLE) / CAST(max(tot) AS DOUBLE)",
-           9)}
-FROM rk
-"""
-
-
-def embedding_diversity_report(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-label embedding diversity report (pre-built r13;
-    ``operators/similarity.py:diversity_report``): mean pairwise
-    cosine over ALL n·(n−1) ordered pairs per group via the
-    sum-vector identity ``(||Σu||² − Σ||u||²)/(n(n−1))`` — a pairwise
-    corpus-health statistic with ZERO pairwise computation — plus the
-    mean cosine-to-centroid ``||Σu||/n`` and the raw-vector covariance
-    trace.  A group's number drifting toward 1 is the near-duplicate
-    collapse signal a sampling stage reads before drawing.
-
-    Scale: the only exchanges move per-(label,dim) and per-label
-    statistics (the posexplode's partial aggregate collapses each
-    partition to labels×d rows before its shuffle); the corpus is
-    scanned once from cache and never pair-joined."""
-    from ..operators.similarity import diversity_report
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    out = diversity_report(emb, group_col="label", vec_col="embedding")
-    return out.select(
-        F.col("label").cast("bigint").alias("label"),
-        "n_vecs",
-        "mean_pairwise_cos",
-        "mean_cos_centroid",
-        "spread",
-    )
-
-
-EMBEDDING_DIVERSITY_SQL = """
-WITH e AS (
-  SELECT label, list_transform(embedding, zz -> CAST(zz AS DOUBLE)) AS v
-  FROM embeddings
-),
-r AS (
-  SELECT label, v,
-         list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b) AS sq
-  FROM e
-),
-k AS (
-  SELECT label, sq, v,
-         list_transform(v, x -> x / sqrt(sq)) AS u
-  FROM r WHERE sq > 0
-),
-ra AS (
-  SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-         cast(sum(cast(list_reduce(list_transform(u, x -> x * x),
-                                   (a, b) -> a + b)
-                       AS decimal(28,8))) AS double) AS usq,
-         cast(sum(cast(sq AS decimal(28,8))) AS double) AS vsq
-  FROM k GROUP BY label
-),
-ex AS (
-  SELECT label, generate_subscripts(u, 1) - 1 AS dim,
-         unnest(u) AS ud, unnest(v) AS vd
-  FROM k
-),
-da AS (
-  SELECT label, dim,
-         cast(sum(cast(ud AS decimal(28,8))) AS double) AS su,
-         cast(sum(cast(vd AS decimal(28,8))) AS double) AS sv
-  FROM ex GROUP BY label, dim
-),
-vv AS (
-  SELECT label,
-         list(su ORDER BY dim) AS sus,
-         list(sv ORDER BY dim) AS svs
-  FROM da GROUP BY label
-)
-SELECT CAST(ra.label AS BIGINT) AS label, ra.n_vecs,
-       CASE WHEN ra.n_vecs < 2 THEN NULL
-            ELSE (list_reduce(list_transform(vv.sus, x -> x * x),
-                              (a, b) -> a + b) - ra.usq)
-                 / CAST(ra.n_vecs * (ra.n_vecs - 1) AS DOUBLE)
-       END AS mean_pairwise_cos,
-       sqrt(list_reduce(list_transform(vv.sus, x -> x * x),
-                        (a, b) -> a + b))
-         / CAST(ra.n_vecs AS DOUBLE) AS mean_cos_centroid,
-       greatest(
-         ra.vsq / CAST(ra.n_vecs AS DOUBLE)
-           - list_reduce(list_transform(vv.svs,
-                  x -> (x / CAST(ra.n_vecs AS DOUBLE))
-                       * (x / CAST(ra.n_vecs AS DOUBLE))),
-                  (a, b) -> a + b),
-         0.0) AS spread
-FROM ra JOIN vv USING (label)
-"""
-
-
-def __getattr__(name: str):
-    if name == "DRIFT_MONITOR_SUITE_SQL":
-        return _drift_monitor_suite_sql()
-    raise AttributeError(name)

@@ -7,10 +7,6 @@ one broadcast map-only assign + bounded-frame windows."""
 from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
     occupancy_balance,
 )
-from data_engineering_for_e_commerce_logistics_spark.plans import (
-    graph_queries as gq,
-)
-from tests.oracle import compare_frames, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
 
@@ -59,26 +55,3 @@ def test_hand_computed_gini(spark):
     ).collect()[0]
     assert out.gini == 0.25
     assert out.imbalance == 1.6
-
-
-def test_ann_balance_matches_duckdb(spark):
-    spdf = gq.ann_balance_report(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(gq.ANN_BALANCE_SQL).fetchdf()
-    conn.close()
-    assert len(spdf) == gq.N_CENTROIDS + 1
-    assert compare_frames(spdf, opdf, "ann_balance_report") == []
-
-
-def test_ann_balance_plan_map_only_assign(spark):
-    """100 TB guard: the corpus side is ONE broadcast packed-centroid
-    map-only assignment feeding one bounded aggregate — no
-    vec-id-keyed shuffle, no sort-merge join, no cartesian (the
-    packed 1-row broadcast nested loop is the legitimate form)."""
-    from tests.test_plans import _plan_of
-
-    plan = _plan_of(spark, gq.ann_balance_report)
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "hashpartitioning(vec_id" not in plan
-    assert "BroadcastNestedLoopJoin" in plan

@@ -84,6 +84,18 @@ def test_prior_bench_ignores_current_round_refresh(tmp_path):
     assert name in regs and regs[name]["prev"] == 1.0
 
 
+def test_core_count_suffixed_artifact_is_not_a_round(tmp_path):
+    """A core-count run (``BENCH_r14_c8.json``) is neither a
+    round marker nor a baseline: both readers share one filename
+    parser, so a lone such file leaves the round at 1 and the baseline
+    chain empty."""
+    name = bench.HEADLINE[0]
+    _write(tmp_path, "BENCH_r14_c8.json", {"parsed": {"queries": {name: 0.5}}})
+    assert bench._next_round(str(tmp_path)) == 1
+    assert bench._bench_round_files(str(tmp_path)) == []
+    assert bench._prior_bench(str(tmp_path)) == {}
+
+
 def test_prior_bench_maps_renames_all_parts_guard():
     prior = {"ffill_events": 0.3, "dedup_keep_first": 0.2}
     mapped = bench._map_renames(prior)
@@ -225,3 +237,106 @@ def test_every_spec_benched_or_explicitly_excluded():
     assert benched & bench.BENCH_EXCLUDED == set()
     # the exclusion list names only real specs (no typo rot)
     assert bench.BENCH_EXCLUDED <= specs
+
+
+# Unregistered builders that a unit test still checks against a DuckDB
+# oracle or uses as the reference for a registered suite's leg.  None
+# is timed by the bench.  The list may only shrink: an entry leaves it
+# when its builder is registered, or is deleted together with its tests.
+_TESTED_UNREGISTERED_BUILDERS = frozenset({
+    ("analytics_queries", "ab_purchase_test"),
+    ("analytics_queries", "cohort_retention_events"),
+    ("analytics_queries", "event_analytics_suite"),
+    ("analytics_queries", "event_transitions"),
+    ("analytics_queries", "hist_drift_events"),
+    ("corpus_queries", "cluster_safe_split_documents"),
+    ("corpus_queries", "corpus_decontaminate"),
+    ("corpus_queries", "corpus_decontaminate_fuzzy"),
+    ("corpus_queries", "corpus_domain_mix"),
+    ("corpus_queries", "corpus_weighted_sample"),
+    ("corpus_queries", "hard_negative_mining"),
+    ("corpus_queries", "hybrid_retrieval_rrf"),
+    ("corpus_queries", "lang_source_independence"),
+    ("corpus_queries", "quality_calibration_bins"),
+    ("corpus_queries", "quality_classifier_suite"),
+    ("corpus_queries", "source_divergence_matrix"),
+    ("extended_queries", "dedup_minhash_lsh"),
+    ("extended_queries", "incremental_exact_fresh"),
+    ("extended_queries", "incremental_minhash_fresh"),
+    ("extended_queries", "incremental_simhash_fresh"),
+    ("extended_queries", "source_overlap_matrix"),
+    ("graph_queries", "corpus_decontaminate_semantic"),
+    ("graph_queries", "dedup_retention_ledger"),
+    ("graph_queries", "dedup_threshold_sweep"),
+    ("graph_queries", "embedding_drift_cells"),
+    ("graph_queries", "ivf_assign"),
+    ("graph_queries", "jl_project_embeddings"),
+    ("graph_queries", "kcenter_seed_embeddings"),
+    ("graph_queries", "kmeans_iterations"),
+    ("graph_queries", "kmeans_refine"),
+    ("graph_queries", "routed_assign_embeddings"),
+    ("graph_queries", "semdedup_keep"),
+    ("graph_queries", "standardize_embeddings_suite"),
+})
+
+
+def test_every_plans_builder_is_registered_or_called():
+    """A ``(spark, sf_dir)`` builder either holds a registry slot, so
+    its oracle is checked and the bench times it, or is a leg another
+    ``plans/`` function calls.  Anything else is unchecked, untimed
+    code and must be deleted rather than parked; the only exceptions
+    are the tested builders listed above, and that list cannot grow."""
+    import ast
+    import glob
+
+    sys.path.insert(0, _REPO)
+    from data_engineering_for_e_commerce_logistics_spark.plans.registry import (
+        all_specs,
+    )
+
+    plans_dir = os.path.join(
+        _REPO, "data_engineering_for_e_commerce_logistics_spark", "plans"
+    )
+    registered = {
+        (s.build.__module__.rsplit(".", 1)[-1], s.build.__name__)
+        for s in all_specs().values()
+    }
+
+    builders: set[tuple[str, str]] = set()
+    called: set[tuple[str, str]] = set()
+    for path in glob.glob(os.path.join(plans_dir, "*.py")):
+        mod = os.path.basename(path)[:-3]
+        tree = ast.parse(open(path).read())
+        # import aliases: local name -> (module, name) or module
+        names: dict[str, tuple[str, str]] = {}
+        modules: dict[str, str] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level == 1:
+                for a in node.names:
+                    if node.module:
+                        names[a.asname or a.name] = (node.module, a.name)
+                    else:
+                        modules[a.asname or a.name] = a.name
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            args = [a.arg for a in fn.args.args]
+            if args == ["spark", "sf_dir"] and not fn.name.startswith("_") and (
+                mod == "views" or mod.endswith("_queries")
+            ):
+                builders.add((mod, fn.name))
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Name) and node.id != fn.name:
+                    called.add(names.get(node.id, (mod, node.id)))
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in modules
+                ):
+                    called.add((modules[node.value.id], node.attr))
+    assert builders, "no plans builders found"
+    offenders = builders - registered - called
+    # a new unregistered, uncalled builder
+    assert sorted(offenders - _TESTED_UNREGISTERED_BUILDERS) == []
+    # a listed builder that was registered or deleted: drop its entry
+    assert sorted(_TESTED_UNREGISTERED_BUILDERS - offenders) == []

@@ -78,43 +78,3 @@ def test_cohort_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "windowspecdefinition" not in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_retention_decay_recovers_half_life(spark):
-    """Planted exponential decay: one cohort of 1024 users whose
-    activity halves every week (1024, 512, 256, 128 at periods 0..3)
-    — retention = 2^(−period), so the fit must read slope = −ln 2
-    (half-life exactly 1 week) with R² ≈ 1; the spec-level
-    composition then re-verifies bitwise against its oracle."""
-    import math
-
-    from data_engineering_for_e_commerce_logistics_spark.operators.temporal import (
-        cohort_retention,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.operators.text import (
-        ols_fit,
-    )
-    from pyspark.sql import functions as F
-
-    keep = {1: 512, 2: 256, 3: 128}  # clean halving every week
-    rows = [(u, 1, 0) for u in range(1024)]  # week-1 first activity
-    for p, k in keep.items():
-        rows += [(u, 1 + 7 * p, 0) for u in range(k)]
-    out = cohort_retention(_ev(spark, rows)).collect()
-    mat = {r.period: r.retention for r in out}
-    assert mat[0] == 1.0 and mat[1] == 0.5 and mat[2] == 0.25
-    pts = (
-        spark.createDataFrame(
-            [(float(p), math.log(r)) for p, r in mat.items() if p >= 1],
-            "x double, y double",
-        )
-    )
-    fit = ols_fit(pts, "x", "y").collect()[0]
-    assert abs(fit.slope - (-math.log(2))) < 1e-6
-    assert fit.r2 > 0.999999
-    # the spec-level composition on real data agrees with its oracle
-    spdf = aq.retention_decay_fit(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(aq.RETENTION_DECAY_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "retention_decay_fit") == []

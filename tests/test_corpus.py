@@ -683,41 +683,6 @@ def test_decontaminate_semantic_zero_norm_contract(spark):
     assert not out[3].contaminated and out[3].max_cosine == 0.0
 
 
-def test_decontaminate_semantic_arrow_twin_equivalence(spark):
-    """The BLAS twin must agree with the registered JVM form: flags
-    and hit counts identical, max_cosine within 1e-9, NULL positions
-    (zero-norm corpus vectors) identical."""
-    from data_engineering_for_e_commerce_logistics_spark.catalog import (
-        read_parquet_table,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
-        decontaminate_semantic,
-        decontaminate_semantic_arrow,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-
-    emb = read_parquet_table(spark, "/root/testdata/sf0.001/embeddings.parquet")
-    bench = emb.filter(F.col("vec_id") % gq.SEM_DECON_BENCH_MOD == 0)
-    corp = emb.filter(F.col("vec_id") % gq.SEM_DECON_BENCH_MOD != 0)
-    jvm = {
-        r.vec_id: r
-        for r in decontaminate_semantic(corp, bench, gq.SEM_DECON_TAU).collect()
-    }
-    arrow = decontaminate_semantic_arrow(corp, bench, gq.SEM_DECON_TAU).collect()
-    assert len(arrow) == len(jvm)
-    for r in arrow:
-        j = jvm[r.vec_id]
-        assert r.n_bench_hits == j.n_bench_hits
-        assert r.contaminated == j.contaminated
-        if j.max_cosine is None:
-            assert r.max_cosine is None
-        else:
-            assert abs(r.max_cosine - j.max_cosine) < 1e-9
-    assert sum(r.contaminated for r in arrow) > 0
-
-
 def test_corpus_decon_suite_matches_duckdb_and_parts(spark):
     """The r16 consolidation: one suite serves all three decon family
     members' rows verbatim and matches the combined DuckDB oracle."""

@@ -4,15 +4,10 @@ must live on the smoothed simplex, the sf0.01 result must match the
 unrolled-CTE DuckDB oracle bitwise, and the plan must collapse the
 corpus to the (domain × bucket) grid in one fused pass."""
 
-from pyspark.sql import functions as F
 
 from data_engineering_for_e_commerce_logistics_spark.operators.corpus import (
     domain_reweight,
 )
-from data_engineering_for_e_commerce_logistics_spark.plans import (
-    corpus_queries as xc,
-)
-from tests.oracle import compare_frames, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
 
@@ -98,30 +93,3 @@ def test_more_iters_sharpens(spark):
         for r in domain_reweight(_planted(spark), n_iters=3).collect()
     }
     assert w3["outlier"] >= w1["outlier"] - 1e-9
-
-
-def test_domain_reweight_matches_duckdb(spark):
-    spdf = xc.domain_reweight_mixture(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.DOMAIN_REWEIGHT_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "domain_reweight_mixture") == []
-
-
-def test_reweight_plan_one_corpus_pass(spark):
-    """100 TB guard: the corpus collapses to the (domain, bucket)
-    grid through ONE fused hash aggregate, and the whole
-    multiplicative-weights loop is WINDOW expressions over that
-    bounded frame — one linear plan, no sort-merge join, no
-    cartesian, no corpus-keyed repartition; the only join is the
-    broadcast of the per-domain doc counts."""
-    from tests.test_plans import _plan_of
-
-    plan = _plan_of(spark, xc.domain_reweight_mixture)
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "hashpartitioning(doc_id" not in plan
-    assert "BroadcastHashJoin" in plan  # the n_docs side only
-    # the iteration windows partition on the bounded grid's keys
-    assert "windowspecdefinition(b#" in plan
-    assert "windowspecdefinition(__dom#" in plan

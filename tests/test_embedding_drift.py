@@ -75,44 +75,3 @@ def test_drift_plan_is_broadcast_map_only_assign(spark):
             r"\bSortMergeJoin\b", ln
         )
     )
-
-
-def test_drift_monitor_suite_matches_duckdb_and_parts(spark):
-    """Suite ↔ oracle, and suite legs ↔ the standalone monitors
-    verbatim (the registry-trade bit-identity discipline)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        analytics_queries as aq,
-    )
-
-    sp = gq.drift_monitor_suite(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    op = conn.execute(gq.DRIFT_MONITOR_SUITE_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(sp, op, "drift_monitor_suite") == []
-
-    hist_leg = (
-        sp[sp.monitor == "hist"]
-        .drop(columns=["monitor"])
-        .sort_values(["variant", "event_type"])
-        .reset_index(drop=True)
-    )
-    hist_part = (
-        aq.hist_drift_events(spark, SF)
-        .toPandas()
-        .sort_values(["variant", "event_type"])
-        .reset_index(drop=True)
-    )
-    assert compare_frames(hist_leg, hist_part, "suite-hist-leg") == []
-    emb_leg = (
-        sp[sp.monitor == "embedding"]
-        .drop(columns=["monitor", "event_type"])
-        .sort_values(["variant"])
-        .reset_index(drop=True)
-    )
-    emb_part = (
-        gq.embedding_drift_cells(spark, SF)
-        .toPandas()
-        .sort_values(["variant"])
-        .reset_index(drop=True)
-    )
-    assert compare_frames(emb_leg, emb_part, "suite-embedding-leg") == []

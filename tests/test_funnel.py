@@ -1,4 +1,4 @@
-"""Ordered-step funnel (pre-built r13): greedy strict-order matching
+"""Ordered-step funnel: greedy strict-order matching
 laws — out-of-order steps don't count, equal timestamps don't
 advance, partial funnels stop where they stop, greedy-earliest equals
 the iterated-min relational construction — plus the sf0.01 bitwise

@@ -122,69 +122,6 @@ def test_bm25_shared_tf_table_is_equivalent(spark):
     assert a == b
 
 
-def test_lexical_suite_matches_duckdb_oracle(spark):
-    """Full cross-engine differential at sf0.01: the padded-union
-    suite (TF-IDF leg + BM25 leg off one shared tf pass) is cell-exact
-    vs LEXICAL_RETRIEVAL_SQL — tokenization, idf rounding, decimal
-    contrib sum, and both rank windows replayed in DuckDB (registry
-    candidate lexical_retrieval_suite, THE r20 trade)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-    from tests.oracle import compare_frames, duckdb_conn
-
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(xc.LEXICAL_RETRIEVAL_SQL).fetchdf()
-    finally:
-        conn.close()
-    spdf = xc.lexical_retrieval_suite(spark, SF).toPandas()
-    assert (spdf.variant == "bm25").sum() > 0
-    assert (spdf.variant == "tfidf").sum() > 0
-    assert compare_frames(spdf, opdf, "lexical_retrieval_suite") == []
-
-
-def test_lexical_suite_matches_parts(spark):
-    """Suite ↔ parts: the 'tfidf' rows carry the retiring
-    corpus_tfidf_topk's cells verbatim, and the 'bm25' rows equal a
-    standalone bm25_topk run at the suite's parameters."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.catalog import (
-        load_tables,
-    )
-
-    suite = xc.lexical_retrieval_suite(spark, SF).toPandas()
-
-    t_part = xc.corpus_tfidf_topk(spark, SF).toPandas()
-    t_leg = suite[suite.variant == "tfidf"]
-    assert sorted(
-        map(tuple, t_leg[["k", "txt", "n", "df", "score", "rank"]].values)
-    ) == sorted(
-        map(
-            tuple,
-            t_part[["doc_id", "term", "tf", "df", "tfidf", "rank"]].values,
-        )
-    )
-
-    docs = load_tables(spark, SF, ("documents",))["documents"]
-    b_part = bm25_topk(
-        docs, xc.BM25_QUERY_IDS, k=xc.BM25_TOPK, k1=xc.BM25_K1, b=xc.BM25_B
-    ).toPandas()
-    b_leg = suite[suite.variant == "bm25"]
-    assert sorted(
-        map(tuple, b_leg[["k", "txt", "n", "score", "rank"]].values)
-    ) == sorted(
-        map(
-            tuple,
-            b_part.assign(doc_id=b_part.doc_id.astype(str))[
-                ["query_id", "doc_id", "n_terms", "bm25", "rank"]
-            ].values,
-        )
-    )
-
-
 def test_bm25_no_overlap_queries_yield_no_rows(spark):
     """A query doc sharing no terms with any other doc retrieves
     nothing (posting-list-bounded candidates, no full-corpus scores)."""

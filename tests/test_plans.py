@@ -632,22 +632,6 @@ def test_semdedup_routing_suite_shared_cached_scan(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_incremental_embedding_suite_shared_cached_scan(spark):
-    """The embedding-side r14 consolidation's point: both incremental
-    flows (semantic full-vector + PQ code index) read the embeddings
-    table from ONE cached frame (InMemoryTableScan) with shared
-    centroids and batch splits, and nothing is a shuffled cartesian
-    (the broadcast packed/codebook nested loops are the designed
-    shape)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-
-    plan = _plan_of(spark, gq.incremental_embedding_suite)
-    assert "CartesianProduct" not in plan
-    assert "InMemoryTableScan" in plan
-
-
 def test_weighted_sample_bucketed_topn_shape(spark):
     """Weighted sampling's 100 TB shape: the exact-rank window
     partitions on (stratum, exponent-bucket) — never on the stratum
@@ -764,33 +748,6 @@ def test_no_scale_killers_in_any_registered_plan(spark):
         spark.catalog.clearCache()
         plan = spec.build(spark, SF)._jdf.queryExecution().executedPlan().toString()
         bad = [p for p in ("CartesianProduct", "BatchEvalPython") if p in plan]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
-def test_prebuilt_wide_no_scale_killers(spark):
-    """The registry-wide sweep extended to the PRE-BUILT runway
-    (tools/prebuilt.py): every not-yet-registered builder gets the
-    same two universal anti-pattern checks before it ever holds a
-    registry slot — a debut can't smuggle in a cartesian product or a
-    row-at-a-time Python UDF between its unit round and its
-    registration round."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from tools.prebuilt import prebuilt_builders
-
-    offenders: dict[str, list[str]] = {}
-    for name, build in prebuilt_builders().items():
-        spark.catalog.clearCache()
-        plan = (
-            build(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        )
-        bad = [
-            p for p in ("CartesianProduct", "BatchEvalPython") if p in plan
-        ]
         if bad:
             offenders[name] = bad
     assert not offenders, offenders

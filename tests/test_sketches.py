@@ -84,32 +84,6 @@ def test_cms_merge_law(spark):
     assert merged == full
 
 
-def test_cms_heavy_hitters_matches_duckdb(spark):
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.cms_heavy_hitters_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.CMS_HEAVY_HITTERS_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "cms_heavy_hitters_events") == []
-    assert len(spdf) == aq.CMS_TOP_K
-    assert spdf.est_ge_exact.all()  # the one-sided law, stated per row
-    assert (spdf.est_err >= 0).all()
-
-
-def test_cms_heavy_hitters_plan_shape(spark):
-    """Sketch side must broadcast (≤ 512 cells); no cartesian, no
-    Python, top-K via TakeOrdered not a global window over all keys."""
-    df = aq.cms_heavy_hitters_events(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_cms_stream_matches_batch_sketch(spark, tmp_path):
     """Streaming twin (start_cms_stream): feeding the events table
     through per-file micro-batches and merging segment partials must
@@ -334,33 +308,6 @@ def test_cms_salted_aggregate_equals_plain_groupby(spark):
             assert out[k][2], k
 
 
-def test_cms_salted_rollup_matches_duckdb(spark):
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.cms_salted_rollup_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.CMS_SALTED_ROLLUP_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "cms_salted_rollup_events") == []
-    # the fixture actually exercises BOTH paths
-    assert spdf.took_salted_path.any()
-    assert (~spdf.took_salted_path).any()
-
-
-def test_cms_salted_rollup_plan_shape(spark):
-    """Packed sketch is a broadcast scalar (nested-loop over ONE row,
-    the bloom-words pattern); no cartesian, no Python, no sort-merge
-    join anywhere — one aggregation tree."""
-    df = aq.cms_salted_rollup_events(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastNestedLoopJoin" in plan
-
-
 def _py_hist(vals, lo, hi, bins):
     import math
 
@@ -419,29 +366,6 @@ def test_hist_quantile_within_bin_width(spark):
         assert abs(est - q * 1000.0) <= 4.0, (q, est)
 
 
-def test_hist_quantiles_events_matches_duckdb(spark):
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.hist_quantiles_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.HIST_QUANTILES_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "hist_quantiles_events") == []
-    quant = spdf[spdf.variant == "quantile"]
-    assert len(quant) == len(aq.HIST_QS)
-    assert quant.ok.all()  # every estimate inside the error bound
-
-
-def test_hist_quantiles_events_plan_shape(spark):
-    df = aq.hist_quantiles_events(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_hist_streams_through_sketch_loop(spark, tmp_path):
     """The generic claim pinned: the quantile histogram streams
     through start_cms_stream via build/cell_cols and the merged
@@ -485,22 +409,6 @@ def test_hist_streams_through_sketch_loop(spark, tmp_path):
         ).collect()
     }
     assert got == want
-
-
-def test_group_hist_quantiles_matches_duckdb(spark):
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.group_hist_quantiles_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.GROUP_HIST_QUANTILES_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "group_hist_quantiles_events") == []
-    quant = spdf[spdf.variant == "quantile"]
-    # every (event_type, q) present, every estimate inside its bound
-    assert len(quant) == 5 * len(aq.GROUP_HIST_QS)
-    assert quant.ok.all()
 
 
 def test_group_hist_quantile_grouped_law(spark):
@@ -587,56 +495,6 @@ def test_hll_streams_through_sketch_loop(spark, tmp_path):
     assert abs(streamed - exact) <= 0.05 * exact
 
 
-def test_hist_suite_matches_duckdb_and_parts(spark):
-    """Suite ↔ oracle, and suite ↔ the two standalone specs: the
-    marginalized global histogram must reproduce hist_quantiles_events
-    verbatim and the grouped legs group_hist_quantiles_events verbatim
-    (the registry-trade equivalence)."""
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.hist_suite_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.HIST_SUITE_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "hist_suite_events") == []
-
-    glob = aq.hist_quantiles_events(spark, SF).toPandas()
-    grp = aq.group_hist_quantiles_events(spark, SF).toPandas()
-
-    def rows(df, variant, cols):
-        sub = df[df.variant == variant]
-        return sorted(
-            tuple(r[c] for c in cols) for _, r in sub.iterrows()
-        )
-
-    assert rows(spdf, "cell", ["bin", "cnt"]) == rows(
-        glob, "cell", ["bin", "cnt"]
-    )
-    assert rows(spdf, "quantile", ["q", "est", "ok"]) == rows(
-        glob, "quantile", ["q", "est", "ok"]
-    )
-    assert rows(spdf, "gcell", ["event_type", "bin", "cnt"]) == rows(
-        grp, "cell", ["event_type", "bin", "cnt"]
-    )
-    assert rows(spdf, "gquantile", ["event_type", "q", "est", "ok"]) == rows(
-        grp, "quantile", ["event_type", "q", "est", "ok"]
-    )
-
-
-def test_hist_suite_single_build_pass(spark):
-    """The consolidation's point: exactly ONE binning scan of events —
-    the grouped build is cached and the global histogram derives from
-    it by marginalization, so the plan reuses the cached pass instead
-    of re-scanning."""
-    df = aq.hist_suite_events(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2  # both halves read the cache
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_hist_psi_matches_python_reference_and_zero_law(spark):
     """PSI against an independent reference on a hand-built pair, and
     the identity law: PSI(h, h) = 0 exactly (p = q per bin ⇒ every
@@ -689,52 +547,6 @@ def test_hist_drift_events_plan_shape(spark):
     assert "InMemoryTableScan" in plan  # the cached reference sketch
 
 
-def test_cms_suite_matches_duckdb_and_parts(spark):
-    """Suite ↔ oracle, and suite ↔ the two standalone CMS specs
-    (the registry-trade bit-identity)."""
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.cms_suite_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.CMS_SUITE_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "cms_suite_events") == []
-
-    hh = aq.cms_heavy_hitters_events(spark, SF).toPandas()
-    roll = aq.cms_salted_rollup_events(spark, SF).toPandas()
-    got_hh = sorted(
-        (r.user_id, r.n, r.cms_est, r.exact_cnt, r.est_err, r.flag)
-        for _, r in spdf[spdf.variant == "hh"].iterrows()
-    )
-    want_hh = sorted(
-        (r.user_id, r.hh_rank, r.cms_est, r.exact_cnt, r.est_err, r.est_ge_exact)
-        for _, r in hh.iterrows()
-    )
-    assert got_hh == want_hh
-    got_roll = sorted(
-        (r.user_id, r.n, r.x, r.flag)
-        for _, r in spdf[spdf.variant == "rollup"].iterrows()
-    )
-    want_roll = sorted(
-        (r.user_id, r.n_events, r.sum_value, r.took_salted_path)
-        for _, r in roll.iterrows()
-    )
-    assert got_roll == want_roll
-
-
-def test_cms_suite_single_cached_scan(spark):
-    """The consolidation's point: the events projection is cached and
-    every consumer reads the cache — plus the universal guards."""
-    df = aq.cms_suite_events(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 4
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_grouped_cms_is_per_group_independent(spark):
     """Grouped build equals per-group standalone builds (grouping is
     bookkeeping, each group's grid independent), and grouped estimates
@@ -769,37 +581,6 @@ def test_grouped_cms_is_per_group_independent(spark):
     }
     exact = {(g, k): rows.count((g, k)) for g, k in set(rows)}
     assert est == exact  # sparse grid ⇒ exact per group
-
-
-def test_group_cms_topk_matches_duckdb(spark):
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.group_cms_topk_events(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.GROUP_CMS_TOPK_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "group_cms_topk_events") == []
-    assert spdf.est_ge_exact.all()
-    assert (spdf.groupby("event_type").grp_rank.max() == aq.GROUP_CMS_TOP_K).all()
-
-
-def test_cms_token_topk_matches_duckdb(spark):
-    """String-keyed CMS: the portable md5-prefix key derivation keeps
-    the sketch cell-exact across engines, and the top tokens match
-    the exact frequency ranking on the near-collision-free fixture."""
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = aq.cms_token_topk_documents(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(aq.CMS_TOKEN_TOPK_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "cms_token_topk_documents") == []
-    assert len(spdf) == aq.TOKEN_CMS_TOP_K
-    assert spdf.est_ge_exact.all()
 
 
 def test_grouped_cms_merge_law(spark):

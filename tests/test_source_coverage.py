@@ -7,10 +7,6 @@ unrolled-argmax DuckDB oracle cell-exactly on the fixture corpus."""
 import pytest
 
 from data_engineering_for_e_commerce_logistics_spark.operators import corpus
-from data_engineering_for_e_commerce_logistics_spark.plans import (
-    corpus_queries as xc,
-)
-from tests.oracle import compare_frames, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
 
@@ -67,14 +63,6 @@ def test_mask_summary_is_bounded_and_exact(spark):
     )
     with pytest.raises(ValueError, match="mask bound"):
         corpus.source_coverage_masks(too_many)
-
-
-def test_source_coverage_matches_duckdb(spark):
-    spdf = xc.source_coverage_greedy(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.SOURCE_COVERAGE_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "source_coverage_greedy") == []
 
 
 def test_mask_plan_shape(spark):
@@ -176,26 +164,3 @@ def test_streamed_coverage_index_matches_batch(spark, tmp_path):
         ).collect()
     }
     assert again == want
-
-
-def test_incremental_coverage_matches_duckdb_and_full_greedy(spark):
-    spdf = xc.incremental_coverage_fresh(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.INCREMENTAL_COVERAGE_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "incremental_coverage_fresh") == []
-    # the accrual-law leg: greedy over the two-batch accrued index
-    # IS the one-shot full-corpus greedy (the %10 split covers all docs)
-    g = (
-        spdf[spdf.variant == "greedy"]
-        .drop(columns=["variant"])
-        .sort_values("sel_rank")
-        .reset_index(drop=True)
-    )
-    full = (
-        xc.source_coverage_greedy(spark, SF)
-        .toPandas()
-        .sort_values("sel_rank")
-        .reset_index(drop=True)
-    )
-    assert compare_frames(g.dropna(axis=1, how="all"), full, "greedy-leg") == []

@@ -8,10 +8,6 @@ frame."""
 from data_engineering_for_e_commerce_logistics_spark.operators.corpus import (
     token_quota_plan,
 )
-from data_engineering_for_e_commerce_logistics_spark.plans import (
-    corpus_queries as xc,
-)
-from tests.oracle import compare_frames, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
 
@@ -75,53 +71,3 @@ def test_budget_conserved_at_fixpoint(spark):
     assert {r.source: r.capped for r in out} == {
         "tiny": 1, "small": 1, "mid": 0, "large": 0,
     }
-
-
-def test_token_quota_matches_duckdb(spark):
-    spdf = xc.token_quota_plan_sources(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.TOKEN_QUOTA_SQL).fetchdf()
-    conn.close()
-    assert len(spdf) == 20
-    assert int(spdf.capped.sum()) > 0  # the capping branch exercises
-    assert compare_frames(spdf, opdf, "token_quota_plan_sources") == []
-
-
-def test_quota_plan_windows_on_bounded_frame(spark):
-    """100 TB guard: the corpus appears only in the per-source token
-    aggregate; every water-filling step is window arithmetic over the
-    K-row frame — no joins, no cartesian."""
-    from tests.test_plans import _plan_of
-
-    plan = _plan_of(spark, xc.token_quota_plan_sources)
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "windowspecdefinition" in plan
-    assert "hashpartitioning(doc_id" not in plan
-
-
-def test_mixture_suite_equals_parts(spark):
-    """The reweight leg must carry domain_reweight_mixture's cells
-    verbatim, and the quota leg must allocate the suite budget
-    exactly with caps exercised."""
-    suite = xc.mixture_planning_suite(spark, SF).toPandas()
-    rw = xc.domain_reweight_mixture(spark, SF).toPandas()
-    r = suite[suite.variant == "reweight"].rename(
-        columns={
-            "s": "source", "n1": "n_docs", "n2": "n_feats",
-            "v1": "loss_own", "v2": "loss_mix", "v3": "excess",
-            "v4": "alpha", "v5": "weight",
-        }
-    )[list(rw.columns)]
-    assert compare_frames(r, rw, "suite-reweight-leg") == []
-    q = suite[suite.variant == "quota"]
-    assert int(q.n2.sum()) > 0
-    assert abs(q.v6.sum() - 26000.0) < 1e-6
-
-
-def test_mixture_suite_matches_duckdb(spark):
-    spdf = xc.mixture_planning_suite(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.MIXTURE_PLANNING_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "mixture_planning_suite") == []

@@ -7,10 +7,6 @@ and the plan has no global sort and no corpus-side join."""
 from data_engineering_for_e_commerce_logistics_spark.operators.text import (
     vocab_growth,
 )
-from data_engineering_for_e_commerce_logistics_spark.plans import (
-    corpus_queries as xc,
-)
-from tests.oracle import compare_frames, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
 
@@ -62,26 +58,3 @@ def test_fixed_vocab_reads_beta_zero(spark):
     _, fit = _legs(vocab_growth(_corpus(spark, texts)))
     assert fit.v1 == 0.0
     assert fit.v3 is None
-
-
-def test_vocab_growth_matches_duckdb(spark):
-    spdf = xc.vocab_growth_curve(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.VOCAB_GROWTH_SQL).fetchdf()
-    conn.close()
-    assert len(spdf) == 17
-    assert compare_frames(spdf, opdf, "vocab_growth_curve") == []
-
-
-def test_vocab_growth_plan_no_global_sort(spark):
-    """100 TB guard: one exchange on the token key (min-bucket,
-    map-side combined), one on the 16-value bucket key; the
-    cumulative window runs on the bounded spine; no corpus-side join,
-    no unbounded sort, no cartesian."""
-    from tests.test_plans import _plan_of
-
-    plan = _plan_of(spark, xc.vocab_growth_curve)
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "hashpartitioning(tok" in plan
-    assert "TakeOrderedAndProject" not in plan  # nothing to top-k

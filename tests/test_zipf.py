@@ -8,10 +8,6 @@ a global sort."""
 from data_engineering_for_e_commerce_logistics_spark.operators.text import (
     zipf_fit,
 )
-from data_engineering_for_e_commerce_logistics_spark.plans import (
-    corpus_queries as xc,
-)
-from tests.oracle import compare_frames, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
 
@@ -69,68 +65,3 @@ def test_top_n_clips_and_counts_exact(spark):
         ("b", 2),
     ]
     assert tot.k == 6 and tot.n == 3
-
-
-def test_zipf_matches_duckdb(spark):
-    spdf = xc.zipf_fit_report(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.ZIPF_FIT_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "zipf_fit_report") == []
-
-
-def test_zipf_plan_takeordered_not_global_sort(spark):
-    """100 TB guard: one wordcount exchange on the token key, the
-    top-N via Spark's bounded TakeOrderedAndProject, the regression
-    on the cached bounded frame — no unbounded global sort, no
-    joins, no cartesian."""
-    from tests.test_plans import _plan_of
-
-    plan = _plan_of(spark, xc.zipf_fit_report)
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "hashpartitioning(tok" in plan
-
-
-def test_token_stats_suite_equals_parts(spark):
-    """The one-aggregate suite must carry BOTH standalone specs'
-    cells verbatim: top/zipf_fit/totals ↔ zipf_fit_report,
-    curve/heaps_fit ↔ vocab_growth_curve."""
-    suite = xc.token_stats_suite(spark, SF).toPandas()
-    zipf = xc.zipf_fit_report(spark, SF).toPandas()
-    heaps = xc.vocab_growth_curve(spark, SF).toPandas()
-
-    z = suite[suite.variant.isin(["top", "zipf_fit", "totals"])].copy()
-    z["variant"] = z.variant.map(
-        {"top": "top", "zipf_fit": "fit", "totals": "totals"}
-    )
-    z = z[["variant", "k", "tok", "n", "v1", "v2", "v3"]]
-    assert compare_frames(z, zipf, "suite-zipf-legs") == []
-
-    h = suite[suite.variant.isin(["curve", "heaps_fit"])].copy()
-    h["variant"] = h.variant.map({"curve": "curve", "heaps_fit": "fit"})
-    h = h.rename(columns={"n": "n_docs", "n2": "n_tokens", "n3": "vocab"})[
-        ["variant", "k", "n_docs", "n_tokens", "vocab", "v1", "v2", "v3"]
-    ]
-    assert compare_frames(h, heaps, "suite-heaps-legs") == []
-
-
-def test_token_stats_suite_matches_duckdb(spark):
-    spdf = xc.token_stats_suite(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    opdf = conn.execute(xc.TOKEN_STATS_SUITE_SQL).fetchdf()
-    conn.close()
-    assert compare_frames(spdf, opdf, "token_stats_suite") == []
-
-
-def test_token_stats_suite_one_wordcount(spark):
-    """Plan guard: ONE (token → count, first-bucket) aggregate serves
-    both families — the cached tf frame appears as InMemoryTableScans
-    and there is exactly one token-keyed exchange family in the plan."""
-    from tests.test_plans import _plan_of
-
-    plan = _plan_of(spark, xc.token_stats_suite)
-    assert "CartesianProduct" not in plan
-    assert plan.count("InMemoryTableScan") >= 3  # tf + ranked + curve
-    assert "hashpartitioning(tok" in plan
